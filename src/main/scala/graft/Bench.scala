@@ -269,7 +269,8 @@ object Bench {
       // The production streaming-auto shape: batch prices, EAGER
       // concurrent dispatch, slice-aware collapse (r15 — this row must
       // price the shipped plan, and annServe(tier=auto) ships
-      // batchCost + sliceAware; lazyUnion was measured and rejected).
+      // batchCost + sliceAware; the lazy routed union was measured and
+      // rejected, SCALE.md "Round-14 serve substrate" item 3).
       "routed_batchcost_" -> (() => SimilarityOps.routeAndServe(
         spark, idx, qdf, batchCost = true, sliceAware = true).collect()))
     val batchMs = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -297,8 +298,8 @@ object Bench {
       "binary" -> (() => SimilarityOps.annBinaryServeMany(spark, idx, oneDf).collect()),
       "int8" -> (() => SimilarityOps.annInt8ServeMany(spark, idx, oneDf).collect()),
       "pq" -> (() => SimilarityOps.annPqServeMany(spark, idx, oneDf).collect()),
-      "pq_rerank" -> (() => SimilarityOps
-        .annPqRerankServeMany(spark, idx, oneDf, fused = false).collect())
+      "pq_rerank" -> (() =>
+        SimilarityOps.annPqRerankServeMany(spark, idx, oneDf).collect())
     ).map { case (t, run) =>
       run()
       t -> Vector.fill(ServePasses) {

@@ -682,8 +682,8 @@ object DedupOps {
     * Returns (relabeled, untouched): the freshly labeled affected ∪ new
     * docs, and the existing rows no new edge reached — callers that
     * maintain a persisted label store write ONLY `relabeled` (see
-    * StreamingOps.componentMaintenance); [[incrementalLabels]] unions
-    * them for the full-frame view. Round11Spec pins incremental ==
+    * StreamingOps.componentMaintenance); their union is the full
+    * updated label frame. Round11Spec pins incremental ==
     * full-recompute equality across streamed batches. */
   private[graft] def mergeComponents(
       existing: DataFrame, newNodes: DataFrame,
@@ -704,13 +704,6 @@ object DedupOps {
       .join(touched, existing("label") === touched("tlabel"), "left_anti")
       .select("doc_id", "label")
     (relabeled, untouched)
-  }
-
-  /** [[mergeComponents]], unioned to the full updated label frame. */
-  private[graft] def incrementalLabels(
-      existing: DataFrame, newNodes: DataFrame, newPairs: DataFrame): DataFrame = {
-    val (relabeled, untouched) = mergeComponents(existing, newNodes, newPairs)
-    untouched.unionByName(relabeled)
   }
 
   /** q159: the fixpoint clusters, oracle-gated — same output shape as q49

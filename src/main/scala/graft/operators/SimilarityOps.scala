@@ -1134,65 +1134,6 @@ object SimilarityOps {
       .orderBy("nprobe")
   }
 
-  // ---- OPQ-lite rotation probe (measurement-only, VERDICT r7 stretch #8) --
-
-  /** Closed-form orthonormal rotation R = (1/√d)·H·D over d = 64:
-    * H[i][j] = (−1)^popcount(i AND j) (Walsh–Hadamard) and D = diag(±1)
-    * seeded from per-coordinate md5 parity — the SRHT-style structured
-    * rotation an OPQ-lite uses to spread variance evenly across the PQ
-    * subspaces. Deterministic, engine-portable (bit_count + md5 exist in
-    * both), and expressible as one matrix-multiply CTE if promoted. */
-  private def rotTable(spark: SparkSession): DataFrame =
-    spark.range(64).select(col("id").cast("int").as("i"))
-      .crossJoin(spark.range(64).select(col("id").cast("int").as("j")))
-      .select(col("i"), col("j"),
-        (((lit(1) - lit(2) * (expr("bit_count(i & j)") % 2)) *
-          (lit(1) - lit(2) * (ascii(substring(md5(col("j").cast("string")), 1, 1)) % 2)))
-          .cast("double") / 8.0).as("r"))
-
-  /** Rotate a (<idCol>, pos, v) long frame: u_i = Σ_j R[i][j]·v_j,
-    * DECIMAL-accumulated. */
-  private[graft] def rotateLongBy(spark: SparkSession, ex: DataFrame, idCol: String): DataFrame =
-    ex.join(broadcast(rotTable(spark)), ex("pos") === col("j"))
-      .groupBy(col(idCol), col("i"))
-      .agg(sum((col("v") * col("r")).cast("decimal(38,18)")).cast("double").as("u"))
-      .select(col(idCol), col("i").as("pos"), col("u").as("v"))
-
-  /** The q105 curve under rotated-residual codebooks — the OPQ-lite
-    * candidate geometry. Exact distances are rotation-invariant, so only
-    * the subspace partitioning (hence codebook quality) changes; the
-    * probe and exact reference are untouched. Measurement tool only
-    * (graft.tools.OpqProbe) — promoted to the declared geometry only if
-    * the curve dominates the plain-residual one. */
-  /** The rotated-residual PQ model, memoized like its siblings —
-    * measurement-only (OpqProbe). */
-  private[graft] def rotatedPqModel(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate(s"rot:${spark.sparkContext.applicationId}:$dir", {
-      val rex = rotateLongBy(spark, residLong(spark, dir), "vec_id")
-      val (cent, asg) = trainPqOn(spark, dir, withSub(rex))
-      (cent.cache(), asg.cache())
-    })
-
-  /** The rotation matrix as a collectable frame (i, j, r) —
-    * measurement-only (OpqProbe replicates the rotation driver-side). */
-  private[graft] def rotTableFrame(spark: SparkSession): DataFrame = rotTable(spark)
-
-  private[graft] def opqRecallCurve(spark: SparkSession, dir: String): DataFrame = {
-    val (kcent, _) = kmeansModel(spark, dir)
-    val (pcent, pasg) = rotatedPqModel(spark, dir)
-    val qx = embLong(spark, dir).filter(col("vec_id") === QueryVecId)
-    val qres = kcent
-      .join(broadcast(qx.select(col("pos"), col("v").as("qv"))), "pos")
-      .select(col("cluster"), col("pos"), (col("qv") - col("c")).as("v"))
-    val qrot = rotateLongBy(spark, qres, "cluster")
-    val dtab = qrot.select(col("cluster"), col("pos"), col("v").as("qr"))
-      .join(pcent.select(col("sub"), col("code"), col("pos"), col("c").as("pc")), "pos")
-      .groupBy("cluster", "sub", "code")
-      .agg(sum(((col("qr") - col("pc")) * (col("qr") - col("pc")))
-        .cast("decimal(38,18)")).as("d"))
-    curveFromDtab(spark, dir, pasg, dtab)
-  }
-
   lazy val ivfPqRecallCurveSql: String =
     s"""WITH $kmeansCtes,
        |$pqCtes,
@@ -1236,28 +1177,6 @@ object SimilarityOps {
 
   /** ADC shortlist size for the re-rank stage. */
   val RerankK = 200
-
-  /** Default serve shape for the batched re-rank tier (r15 — VERDICT
-    * r14 #8): `true` = the float read-back rides the SAME
-    * probed-partition scan as the ADC shortlist ranking (one scheduled
-    * scan per serve), `false` = the original two-scan shape (code scan +
-    * a second partition-pruned float read-back semi-joined to the
-    * shortlist). Measured at sf0.1 (ServeProbe, SCALE.md "Fused
-    * re-rank"): fused WINS locally in all 3 runs — it deletes the
-    * second job's fixed plan/schedule floor — but it wins by moving the
-    * d-float embedding of EVERY probed candidate through the
-    * rank-window exchange: measured 14.1 MB vs 6.0 MB total shuffle per
-    * batch-of-20, and the 8.1 MB DELTA is exactly the
-    * |Q|·candidates·(d·4 B) window payload — the one term that grows
-    * with corpus size, vs the two-scan window's 24-byte
-    * (qid, vec_id, adist) rows plus a re-SCAN of the embedding column.
-    * Scans parallelize; shuffle is the 100 TB bottleneck — so the
-    * DEFAULT stays the two-scan shape, and `fused = true` remains the
-    * measured latency-floor option for plan-overhead-dominated
-    * deployments.
-    * Round15Spec pins the two shapes row-identical, so the call is
-    * re-measurable whenever geometry or hardware moves. */
-  val FusedRerank = false
 
   /** q111: the production last mile of the composed tier — IVF-PQ's
     * 64-bit ADC scan produces a RerankK-deep shortlist, and only those
@@ -1686,63 +1605,27 @@ object SimilarityOps {
     * ADC stage ranks to RerankK per query; the float read-back is a
     * second partition-pruned scan semi-joined to the (|Q|·RerankK)-row
     * broadcast shortlist; exact cosine + one rank window per query.
-    * Nothing grows with corpus size except the pruned 64-bit scan.
-    *
-    * `fused` (r15 — VERDICT r14 #8): ONE probed-partition scan reads
-    * `embedding` alongside `pq_codes`; the exact cosine is computed on
-    * the rows the arank window keeps (arank ≤ RerankK) inside the same
-    * plan, so the tier's second scheduled scan — its ~0.9–1.2 s plan
-    * floor and the max-over-tiers driver in most routed batches — is
-    * gone. Both rank windows hash-partition by query_id, so Catalyst
-    * reuses ONE exchange for both; the price is that exchange carrying
-    * the d-float embedding for every probed candidate instead of only
-    * the |Q|·RerankK read-back rows. Results are bit-equal by
-    * construction (same DECIMAL adist fold, same windows, same
-    * tie-breaks — Round15Spec pins fused ≡ two-scan rows); which shape
-    * ships is a pure measurement call, recorded in SCALE.md. */
+    * Nothing grows with corpus size except the pruned 64-bit scan. */
   def annPqRerankServeMany(
       spark: SparkSession, indexDir: String, queries: DataFrame,
       nprobe: Int = NProbeServe,
       sharedProbes: Option[DataFrame] = None,
-      fused: Boolean = FusedRerank,
       depth: Int = TopK): DataFrame = {
     val cent = indexMeta(spark, indexDir, "centroids")
     val pcent = indexMeta(spark, indexDir, "pq_centroids")
     val qx = qxOf(queries)
     val probes = sharedProbes.getOrElse(probesMany(cent, qx, nprobe))
     val dtab = adcTablesMany(cent, pcent, qx, probes)
-    val reranked =
-      if (fused)
-        servedVectorsDf(spark, indexDir)
-          .select(col("vec_id"), col("cluster"), col("pq_codes"), col("embedding"))
-          .join(broadcast(probes), "cluster")
-          .select(col("query_id"), col("vec_id"),
-            col("cluster").cast("long").as("cluster"), col("pq_codes"),
-            col("embedding"))
-          .join(broadcast(adcTableArr(dtab, Seq("query_id", "cluster"))),
-            Seq("query_id", "cluster"))
-          .withColumn("adist", adcDistLocal)
-          .withColumn("arank", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("arank") <= RerankK)
-          .join(broadcast(queries.select(col("query_id"),
-            col("embedding").as("q_embedding"))), "query_id")
-          .select(col("query_id"), col("vec_id"),
-            cosineSim(col("embedding"), col("q_embedding")).as("cos"))
-      else {
-        val shortlist = adcRankMany(spark, indexDir, probes, dtab, RerankK)
-          .select("query_id", "vec_id")
-        servedVectorsDf(spark, indexDir)
-          .select(col("vec_id"), col("cluster"), col("embedding"))
-          .join(broadcast(probes), "cluster")
-          .join(broadcast(shortlist), Seq("query_id", "vec_id"))
-          .join(broadcast(queries.select(col("query_id"),
-            col("embedding").as("q_embedding"))), "query_id")
-          .select(col("query_id"), col("vec_id"),
-            cosineSim(col("embedding"), col("q_embedding")).as("cos"))
-      }
-    reranked
+    val shortlist = adcRankMany(spark, indexDir, probes, dtab, RerankK)
+      .select("query_id", "vec_id")
+    servedVectorsDf(spark, indexDir)
+      .select(col("vec_id"), col("cluster"), col("embedding"))
+      .join(broadcast(probes), "cluster")
+      .join(broadcast(shortlist), Seq("query_id", "vec_id"))
+      .join(broadcast(queries.select(col("query_id"),
+        col("embedding").as("q_embedding"))), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        cosineSim(col("embedding"), col("q_embedding")).as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc))
         .cast("long"))
@@ -1762,10 +1645,11 @@ object SimilarityOps {
   /** q110: the q105 curve averaged over a NPanel-query panel — the
     * statistically meaningful operating measurement. A single query's
     * recall@50 moves in steps of 1/TopK = 0.02, so q105's per-depth
-    * numbers carry ±several-step noise (the round-8 OpqProbe measurement
-    * made this concrete); averaging over a fixed declared panel turns
-    * the curve into a number a deployment can actually compare across
-    * geometry or probe-depth changes. Same machinery as q105 with a qid
+    * numbers carry ±several-step noise (the round-8 rotation
+    * measurement, SCALE.md PQ (q98) bullet, made this concrete);
+    * averaging over a fixed declared panel turns the curve into a
+    * number a deployment can actually compare across geometry or
+    * probe-depth changes. Same machinery as q105 with a qid
     * column threaded through every stage: per-query exact top-k
     * (broadcast panel × corpus, window per qid), per-query cluster
     * ranks, per-(query, cell) residual ADC tables (NPanel·K·PqM·PqK =
@@ -4879,9 +4763,10 @@ object SimilarityOps {
     * Round8OpsSpec pins that the residual switch strictly lowers mean
     * reconstruction error and holds-or-improves the declared q105 curve
     * at every probe depth; on THIS corpus the mean-recall gain over a
-    * 50-query panel is within noise (OpqProbe) — exactly what q97's
-    * near-isotropy (λ₂/λ₁ ≈ 0.93) predicts, since residual coding's win
-    * scales with how much of the variance the coarse cells explain.
+    * 50-query panel is within noise (SCALE.md PQ (q98) bullet) —
+    * exactly what q97's near-isotropy (λ₂/λ₁ ≈ 0.93) predicts, since
+    * residual coding's win scales with how much of the variance the
+    * coarse cells explain.
     * Residual stays the declared geometry: never worse, strictly
     * better-conditioned, and the standard production construction on
     * real (clustered) embedding corpora. Output: one row per
@@ -4943,9 +4828,6 @@ object SimilarityOps {
     * instead of re-encoding the cell means the coarse index has already
     * paid for. One broadcast join against the K×dims centroid table;
     * row-local subtraction. */
-  private def residLong(spark: SparkSession, dir: String): DataFrame =
-    residLongAt(spark, dir, KmeansK)
-
   private def residLongAt(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val (cent, asg) = kmeansModelAt(spark, dir, k)
     embLong(spark, dir)
@@ -6108,8 +5990,8 @@ object SimilarityOps {
   /** q202's imbalance (max cell size / mean cell size) read from the
     * index's size artifact — THE shared definition for every consumer
     * of the trigger signal (streaming maybeSplit, the SplitVectorIndex
-    * CLI, SplitProbe), so the trigger, the report, and the probe can
-    * never silently disagree. 0.0 for an empty index. */
+    * CLI, the SCALE.md "Hot-cell split" measurements), so the trigger and
+    * the report can never silently disagree. 0.0 for an empty index. */
   private[graft] def indexImbalance(spark: SparkSession, indexDir: String): Double = {
     val (sizes, ntot) = indexClusterSizes(spark, indexDir)
     if (sizes.isEmpty) 0.0
@@ -6230,7 +6112,6 @@ object SimilarityOps {
       wE4: Map[String, Long] = Map.empty,
       nprobe: Int = NProbeServe,
       batchCost: Boolean = false,
-      lazyUnion: Boolean = false,
       sliceAware: Boolean = false,
       depthAware: Boolean = false,
       filterOp: Option[String] = None,
@@ -6408,53 +6289,38 @@ object SimilarityOps {
     // default pool — and each Await is FINITE: a hung tier plan surfaces
     // as a serve error (spark.graft.serve.timeoutSec, default 600)
     // instead of stalling a streaming micro-batch forever.
-    // `lazyUnion` (r14 stretch): return the UNION UNCHECKPOINTED — the
-    // caller's single action (a sink write, a collect) materializes all
-    // tier subtrees in ONE job, whose independent stages the DAG
-    // scheduler already runs concurrently. Correct for single-consumer
-    // callers (foreachBatch sinks); the eager default stays right for
-    // callers that re-read the answers, since an uncheckpointed union
-    // would re-run every tier plan per action. The census/choice frame
-    // is checkpointed in BOTH modes — the double-plan race r13 closed
-    // stays closed.
     import scala.concurrent.{Await, Future}
     val timeoutSec = spark.conf.get("spark.graft.serve.timeoutSec", "600").toLong
-    val parts =
-      if (lazyUnion) present.map { t =>
-        val (serve, scoreCol) = serveManyOf(t)
-        serve(routedSlice(dispatchQueries, choices, t))
-          .withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
+    val parts = present.map { t =>
+      // Each dispatch runs under its own JOB GROUP so a timeout can
+      // CANCEL the hung Spark job, not just abandon it: an abandoned
+      // action would keep its pool thread forever, and five such
+      // events would exhaust the fixed pool and stall every later
+      // routed batch in the session even after the cause cleared.
+      // (The timeout covers queue time too — by design: a batch stuck
+      // BEHIND hung dispatches is just as stalled as one hung itself.)
+      val group = s"graft-route-$t-${java.util.UUID.randomUUID()}"
+      (t, group, Future {
+        spark.sparkContext.setJobGroup(group,
+          s"routeAndServe dispatch: $t", interruptOnCancel = true)
+        try {
+          val (serve, scoreCol) = serveManyOf(t)
+          serve(routedSlice(dispatchQueries, choices, t))
+            .withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
+            .localCheckpoint(true)
+        } finally spark.sparkContext.clearJobGroup()
+      }(tierDispatchPool))
+    }.map { case (t, group, f) =>
+      try Await.result(f, scala.concurrent.duration.Duration(timeoutSec, "s"))
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          spark.sparkContext.cancelJobGroup(group)
+          throw new IllegalStateException(
+            s"routeAndServe: tier '$t' dispatch exceeded $timeoutSec s " +
+              "(spark.graft.serve.timeoutSec) — job group cancelled, " +
+              "serve request aborted")
       }
-      else present.map { t =>
-        // Each dispatch runs under its own JOB GROUP so a timeout can
-        // CANCEL the hung Spark job, not just abandon it: an abandoned
-        // action would keep its pool thread forever, and five such
-        // events would exhaust the fixed pool and stall every later
-        // routed batch in the session even after the cause cleared.
-        // (The timeout covers queue time too — by design: a batch stuck
-        // BEHIND hung dispatches is just as stalled as one hung itself.)
-        val group = s"graft-route-$t-${java.util.UUID.randomUUID()}"
-        (t, group, Future {
-          spark.sparkContext.setJobGroup(group,
-            s"routeAndServe dispatch: $t", interruptOnCancel = true)
-          try {
-            val (serve, scoreCol) = serveManyOf(t)
-            serve(routedSlice(dispatchQueries, choices, t))
-              .withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
-              .localCheckpoint(true)
-          } finally spark.sparkContext.clearJobGroup()
-        }(tierDispatchPool))
-      }.map { case (t, group, f) =>
-        try Await.result(f, scala.concurrent.duration.Duration(timeoutSec, "s"))
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            spark.sparkContext.cancelJobGroup(group)
-            throw new IllegalStateException(
-              s"routeAndServe: tier '$t' dispatch exceeded $timeoutSec s " +
-                "(spark.graft.serve.timeoutSec) — job group cancelled, " +
-                "serve request aborted")
-        }
-      }
+    }
     // The filtered pre slice unions in after the tier dispatch: one
     // shared exact arm for the whole batch (tier-independent answers,
     // labeled with each query's routed tier for the record).
@@ -6470,7 +6336,7 @@ object SimilarityOps {
           col("rank").cast("long").as("rank"),
           r6(col("cos")).as("score"), col("strategy"))
         .join(broadcast(choices), "query_id")
-      Seq(if (lazyUnion) preDf else preDf.localCheckpoint(true))
+      Seq(preDf.localCheckpoint(true))
     }
     val allParts = parts ++ preParts
     // An empty request frame routes nowhere — answer with an empty frame
@@ -7423,9 +7289,9 @@ object SimilarityOps {
     * (1 − d1/d2: its nearest cell is clearly nearest) concentrates its
     * true neighbors in the first cells, so shallow probing loses little
     * recall; a LOW margin says the cell boundary cut through the
-    * query's neighborhood — probe deeper. Thresholds from the
-    * NprobeProbe sf0.1 table (margin vs per-query recall@50 at depths
-    * 4/8/16 — SCALE.md "Dispatch-aware probe depth"), read HONESTLY:
+    * query's neighborhood — probe deeper. Thresholds from the sf0.1
+    * calibration table (margin vs per-query recall@50 at depths 4/8/16 —
+    * SCALE.md "Dispatch-aware probe depth"), read HONESTLY:
     * at this corpus's K = 10, TopK = 50 spans ~5 cells' worth of
     * neighbors, so depth 4 loses recall for EVERY query — the shallow
     * threshold 0.15 is deliberately above the largest margin the panel
@@ -7461,8 +7327,8 @@ object SimilarityOps {
     * clear-margin query pays half the rows for the same recall
     * (measured scanned-row fractions in SCALE.md; at sf0.1's K = 10 the
     * wall delta is plan-floor-dominated, which is why the depth-routed
-    * serve ships as a non-default option — the fused-re-rank
-    * adjudication pattern). Census work: margins ride the one
+    * serve ships as a non-default option — SCALE.md "Dispatch-aware
+    * probe depth"). Census work: margins ride the one
     * coarse-scoring pass every routed batch already pays. */
   def probeDepthPlan(spark: SparkSession, dir: String): DataFrame =
     tierFeatures(spark, dir)
@@ -7479,8 +7345,7 @@ object SimilarityOps {
        |       ELSE $NProbeServe END AS BIGINT) AS np_depth
        |FROM tft ORDER BY qid""".stripMargin
 
-  /** The serving-side coarse rank frame for a request batch — exposed
-    * for probes/specs that audit scanned-row coverage. */
+  /** The serving-side coarse rank frame for a request batch. */
   private[graft] def crankFrameFor(
       spark: SparkSession, indexDir: String, queries: DataFrame): DataFrame =
     crankOf(indexMeta(spark, indexDir, "centroids"), qxOf(queries))
@@ -7828,8 +7693,9 @@ object SimilarityOps {
 
   /** The tier's batched shortlist plan + its native score column +
     * whether that score ranks ASCENDING (pq's adist) — the one table
-    * the filtered twins, the routed filtered dispatch, and FilterProbe
-    * share so they can never disagree on a tier's overfetch shape.
+    * the filtered twins and the routed filtered dispatch share (measured
+    * in SCALE.md "Filtered ANN serving") so they can never disagree on a
+    * tier's overfetch shape.
     * `depth` caps: the binary and pq_rerank shortlists pass through a
     * [[RerankK]]-deep first stage, so their effective overfetch is
     * min(depth, RerankK). */
@@ -7852,7 +7718,7 @@ object SimilarityOps {
           "adist", true)
       case "pq_rerank" =>
         (annPqRerankServeMany(spark, indexDir, slice, nprobe, sharedProbes,
-          FusedRerank, depth), "cos", false)
+          depth = depth), "cos", false)
       case other => throw new IllegalArgumentException(
         s"unknown tier: $other (one of ${Tiers.mkString(", ")})")
     }

@@ -108,9 +108,7 @@ object Retrievers {
     * Single-pass window formulation: a groupBy-stats + self-join would
     * execute the upstream scoring plan twice per use. The window shuffles
     * one query's dense scores to one partition — acceptable because a
-    * query's score set is the unit of normalization anyway; for corpora
-    * where a single query's scores exceed a partition, use
-    * `minMaxNormBroadcast` below.
+    * query's score set is the unit of normalization anyway.
     */
   def minMaxNorm(scores: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
@@ -119,25 +117,6 @@ object Retrievers {
     scores.select(col("query_id"), col("doc_id"), col("doc_idx"),
       when(hi <= lo, 0.0)
         .otherwise((col("score") - lo) / (hi - lo)).as("score"))
-  }
-
-  /** Scale-path min-max normalization: the per-query (lo, hi) pair comes
-    * from a tiny aggregate broadcast back onto the dense scores — no
-    * single-partition window anywhere, so one query's score set can span
-    * arbitrarily many partitions. Same semantics as `minMaxNorm` (min/max
-    * are order-insensitive, so the two formulations agree bit-for-bit).
-    * Trade-off: the upstream scoring plan executes twice (once for stats,
-    * once for data) unless the caller persists it — which is why the
-    * windowed form stays the default for the reference-parity pipeline's
-    * cheap per-query frames.
-    */
-  def minMaxNormBroadcast(scores: DataFrame): DataFrame = {
-    val stats = scores.groupBy("query_id")
-      .agg(min(col("score")).as("lo"), max(col("score")).as("hi"))
-    scores.join(broadcast(stats), "query_id")
-      .select(col("query_id"), col("doc_id"), col("doc_idx"),
-        when(col("hi") <= col("lo"), 0.0)
-          .otherwise((col("score") - col("lo")) / (col("hi") - col("lo"))).as("score"))
   }
 
   /** Stable top-k (reference text.py:52-54): score DESC, corpus position ASC.

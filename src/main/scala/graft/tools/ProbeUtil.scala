@@ -1,21 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.functions.CosineSimilarity.cosineSim
-import graft.operators.SimilarityOps
-
-/** Shared helpers for the measurement probes (and the specs that clone
-  * index directories) — hoisted so a fix to the truth tie-break, the
-  * timing protocol, or directory cloning cannot silently miss a copy. */
+/** Directory cloning for the specs that copy index directories. */
 object ProbeUtil {
 
   /** Recursive directory copy (files replaced, directories created).
-    * The walk stream is closed explicitly (ADVICE r16): probes and specs
-    * call this in loops, and each unclosed stream leaks a directory
-    * handle. */
+    * The walk stream is closed explicitly (ADVICE r16): specs call this
+    * in loops, and each unclosed stream leaks a directory handle. */
   def copyDir(src: String, dst: String): Unit = {
     val s = java.nio.file.Paths.get(src)
     val d = java.nio.file.Paths.get(dst)
@@ -27,31 +17,5 @@ object ProbeUtil {
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } finally walk.close()
-  }
-
-  /** Exact cosine top-[[SimilarityOps.TopK]] truth per query over the
-    * index's LIVE rows — (cos DESC, vec_id ASC), the engine's one
-    * ranking tie-break. */
-  def exactTruth(spark: SparkSession, indexDir: String,
-      qdf: DataFrame): Map[Long, Set[Long]] =
-    SimilarityOps.vectorsDf(spark, indexDir)
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(qdf.select(col("query_id"),
-        col("embedding").as("q_embedding"))))
-      .select(col("query_id"), col("vec_id"),
-        cosineSim(col("embedding"), col("q_embedding")).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)))
-      .filter(col("rank") <= SimilarityOps.TopK)
-      .collect().groupBy(_.getAs[Long]("query_id"))
-      .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
-
-  /** Min-of-5 wall time in ms after one untimed warmup — the probes'
-    * shared steady-state protocol. */
-  def timedMinMs(run: => Unit): Double = {
-    run
-    (1 to 5).map { _ =>
-      val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e6
-    }.min
   }
 }

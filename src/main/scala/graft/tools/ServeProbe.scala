@@ -90,15 +90,13 @@ object ServeProbe {
         "binary" -> timed(SimilarityOps.annBinaryServeMany(spark, idx, qdf).collect()),
         "int8" -> timed(SimilarityOps.annInt8ServeMany(spark, idx, qdf).collect()),
         "pq" -> timed(SimilarityOps.annPqServeMany(spark, idx, qdf).collect()),
-        "pq_rerank" -> timed(
-          SimilarityOps.annPqRerankServeMany(spark, idx, qdf, fused = false).collect()))
+        "pq_rerank" -> timed(SimilarityOps.annPqRerankServeMany(spark, idx, qdf).collect()))
       val oneRow: Map[String, Double] = Map(
         "float" -> timed(SimilarityOps.annIvfServeMany(spark, idx, one).collect()),
         "binary" -> timed(SimilarityOps.annBinaryServeMany(spark, idx, one).collect()),
         "int8" -> timed(SimilarityOps.annInt8ServeMany(spark, idx, one).collect()),
         "pq" -> timed(SimilarityOps.annPqServeMany(spark, idx, one).collect()),
-        "pq_rerank" -> timed(
-          SimilarityOps.annPqRerankServeMany(spark, idx, one, fused = false).collect()))
+        "pq_rerank" -> timed(SimilarityOps.annPqRerankServeMany(spark, idx, one).collect()))
       val f20 = batch20("float")
       def entries(m: Map[String, Double], prefix: String) =
         m.toSeq.sortBy(_._1).map { case (t, v) =>
@@ -164,15 +162,6 @@ object ServeProbe {
           "probe_six_tok", "probe_six_gram", textPanel).collect()
       }
     }
-    // r14 stretch: the lazy union (one action materializes every tier
-    // subtree in one job) vs the eager per-tier checkpoint dispatch.
-    time("routed_batch20_lazy_ms") {
-      SimilarityOps.routeAndServe(spark, idx, qdf, lazyUnion = true).collect()
-    }
-    time("routed_batchcost_batch20_lazy_ms") {
-      SimilarityOps.routeAndServe(spark, idx, qdf, batchCost = true,
-        lazyUnion = true).collect()
-    }
     // Per-tier batch-of-20 rows — the q200 penalty inputs, re-measured
     // here after the r14 int8 rewrite so the census can be re-pinned
     // from the shipped plans' actual prices.
@@ -189,59 +178,7 @@ object ServeProbe {
       SimilarityOps.annPqServeMany(spark, idx, qdf).collect()
     }
     time("pq_rerank_batch20_ms") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, qdf, fused = false).collect()
-    }
-    // r15 stretch (VERDICT r14 #8): the float read-back riding the SAME
-    // probed-partition scan as the ADC ranking — one scheduled scan per
-    // serve instead of the tier's two-scan plan floor.
-    time("pq_rerank_fused_batch20_ms") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, qdf, fused = true).collect()
-    }
-    // The 100 TB side of the fused verdict: wall time at sf0.1 is
-    // plan-floor-dominated and hides that the fused shape moves the
-    // d-float embedding of EVERY probed candidate through the
-    // rank-window exchange, while the two-scan window moves 24-byte
-    // (qid, vec_id, adist) rows and the read-back re-SCANS the embedding
-    // column (scans parallelize; shuffle is the scale bottleneck). A
-    // listener totals shuffle write bytes per variant, once each.
-    def shuffleBytes(tag: String)(run: => Unit): Unit = {
-      if (only.nonEmpty && !only.exists(tag.contains)) return
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stages = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          // taskMetrics is null for stages that never ran a task
-          // (failed/skipped) — an NPE here would be swallowed by the
-          // listener bus and silently drop the event.
-          val m = s.stageInfo.taskMetrics
-          if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          stages.incrementAndGet()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        run
-        // The listener bus is asynchronous: poll until the counter is
-        // stable across two consecutive reads. The stability check only
-        // STARTS once at least one stage event has been delivered — on a
-        // loaded host two early polls can both read 0 before the bus
-        // delivers anything, and a bare match-based exit would print an
-        // undercount (ADVICE r15; every `run` here ends in a collect, so
-        // ≥ 1 completed stage is guaranteed). Capped at 15 s.
-        var prev = -1L
-        var waited = 0
-        while ((stages.get() == 0L || bytes.get() != prev) && waited < 30) {
-          prev = bytes.get(); Thread.sleep(500); waited += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      println(s"""[serveprobe] "$tag": ${bytes.get()}""")
-    }
-    shuffleBytes("pq_rerank_twoscan_shuffle_bytes") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, qdf, fused = false).collect()
-    }
-    shuffleBytes("pq_rerank_fused_shuffle_bytes") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, qdf, fused = true).collect()
+      SimilarityOps.annPqRerankServeMany(spark, idx, qdf).collect()
     }
     time("float_single_ms") {
       SimilarityOps.annIvfServe(spark, idx, panel.head._2).collect()
@@ -256,10 +193,7 @@ object ServeProbe {
       SimilarityOps.annPqRerankServe(spark, idx, panel.head._2).collect()
     }
     time("pq_rerank_1row_batch_ms") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, one, fused = false).collect()
-    }
-    time("pq_rerank_fused_1row_batch_ms") {
-      SimilarityOps.annPqRerankServeMany(spark, idx, one, fused = true).collect()
+      SimilarityOps.annPqRerankServeMany(spark, idx, one).collect()
     }
     // Remaining per-tier 1-row batch floors (r15): the arm-OPENING price
     // each tier pays when a routed slice dispatches it at all — the

@@ -57,18 +57,6 @@ class PropertySpec extends SparkSpec {
     assert(got.toSeq == want.toSeq)
   }
 
-  test("minMaxNormBroadcast equals the windowed formulation bit-for-bit") {
-    check(Prop.forAll(scoreGen) { scores =>
-      val df = scores.zipWithIndex
-        .map { case (s, i) => (if (i % 2 == 0) "qa" else "qb", i.toLong, i.toLong, s) }
-        .toDF("query_id", "doc_id", "doc_idx", "score").repartition(8)
-      def collectNorm(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-        f(df).orderBy("query_id", "doc_id").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getDouble(3))).toSeq
-      collectNorm(Retrievers.minMaxNorm) == collectNorm(Retrievers.minMaxNormBroadcast)
-    })
-  }
-
   test("minMaxNorm: range [0,1]; constant → zeros; extremes map to 1/0") {
     check(Prop.forAll(scoreGen) { scores =>
       val df = scores.zipWithIndex

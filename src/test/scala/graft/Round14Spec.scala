@@ -166,20 +166,6 @@ class Round14Spec extends SparkSpec {
       "heal-path recount diverged from the artifact's features")
   }
 
-  test("routeAndServe lazyUnion serves row-identical answers to the " +
-    "eager per-tier checkpoint dispatch") {
-    val panelIds = embOf.keys.toSeq.sorted
-    def normalized(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
-        r.getAs[Long]("vec_id"), r.getAs[Double]("score"),
-        r.getAs[String]("tier"))).sortBy(t => (t._1, t._2)).toSeq
-    val eager = normalized(
-      SimilarityOps.routeAndServe(spark, idx, reqs(panelIds), batchCost = true))
-    val lazyU = normalized(SimilarityOps.routeAndServe(spark, idx,
-      reqs(panelIds), batchCost = true, lazyUnion = true))
-    assert(lazyU == eager, "lazy union diverged from the eager dispatch")
-  }
-
   test("streaming annServe(tier=auto, stateDir) routes every panel query " +
     "to the slice-collapse of q201's learned-weight batch-price choice " +
     "(r15: the shipped auto path is batchCost + sliceAware)") {

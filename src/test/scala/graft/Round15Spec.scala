@@ -229,21 +229,6 @@ class Round15Spec extends SparkSpec {
     assert(got == exp, "routed answers diverged from the tiers' own plans")
   }
 
-  // ---- fused single-scan re-rank serve (VERDICT r14 #8 stretch) -----------
-
-  test("annPqRerankServeMany fused ≡ two-scan: identical rows for the " +
-    "full panel and for a 1-row batch (both rank-window tie-breaks and " +
-    "the DECIMAL adist shortlist agree bit-for-bit)") {
-    val panelIds = embOf.keys.toSeq.sorted
-    for (ids <- Seq(panelIds, panelIds.take(1))) {
-      val two = SimilarityOps.annPqRerankServeMany(spark, idx, reqs(ids),
-        fused = false).collect().map(_.toSeq).toSeq
-      val fz = SimilarityOps.annPqRerankServeMany(spark, idx, reqs(ids),
-        fused = true).collect().map(_.toSeq).toSeq
-      assert(fz == two, s"fused re-rank diverged from two-scan for |Q|=${ids.length}")
-    }
-  }
-
   // ---- q204: the split plan IS the actuator's selection --------------------
 
   test("q204 split plan: splitHotCells on a fresh index executes exactly " +

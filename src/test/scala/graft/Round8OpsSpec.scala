@@ -14,9 +14,9 @@ import graft.operators.{DedupOps, SimilarityOps}
   * pre-round-8 raw-vector geometry, measured by the exact same curve
   * machinery over the same corpus and coarse quantizer. (A single-query
   * curve moves in 0.02 steps, so this pins the declared operating
-  * configuration, not a statistical claim — graft.tools.OpqProbe runs
-  * the 50-query mean-recall panel; see SCALE.md for the measured
-  * near-isotropy context.)
+  * configuration, not a statistical claim — the 50-query mean-recall
+  * panel and the measured near-isotropy context are in SCALE.md's PQ
+  * (q98) bullet.)
   */
 class Round8OpsSpec extends SparkSpec {
 

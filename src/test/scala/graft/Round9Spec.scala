@@ -132,49 +132,6 @@ class Round9Spec extends SparkSpec {
     assert(servedBefore == servedAfter, "served answer changed across the compaction swap")
   }
 
-  // ---- OPQ rotation decision (measured, not promoted) ---------------------
-
-  test("OPQ rotation is orthonormal: R^T R = I to 1e-12") {
-    val r = SimilarityOps.rotTableFrame(spark).collect()
-    val m = Array.ofDim[Double](64, 64)
-    r.foreach(row => m(row.getAs[Int]("i"))(row.getAs[Int]("j")) = row.getAs[Double]("r"))
-    var maxErr = 0.0
-    var i = 0
-    while (i < 64) {
-      var j = 0
-      while (j < 64) {
-        var s = 0.0
-        var k = 0
-        while (k < 64) { s += m(k)(i) * m(k)(j); k += 1 }
-        val expect = if (i == j) 1.0 else 0.0
-        maxErr = math.max(maxErr, math.abs(s - expect))
-        j += 1
-      }
-      i += 1
-    }
-    assert(maxErr < 1e-12, s"R^T R deviates from I by $maxErr")
-  }
-
-  test("engine rotation preserves exact cosine (rotation invariance)") {
-    // Two deterministic 64-d vectors through the ENGINE's rotateLongBy:
-    // cosine before == cosine after within double-rounding noise, which is
-    // why the exact tiers are untouched by the OPQ geometry question and
-    // only codebook quality could have moved (measured within noise at
-    // sf0.1 — OpqProbe, SCALE.md).
-    val vecs = (0 until 64).flatMap { p =>
-      Seq((1L, p, math.sin(p + 1.0)), (2L, p, math.cos(2.0 * p + 0.5)))
-    }.toDF("vec_id", "pos", "v")
-    def cosOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val a = df.filter(col("vec_id") === 1L).orderBy("pos").collect().map(_.getDouble(2))
-      val b = df.filter(col("vec_id") === 2L).orderBy("pos").collect().map(_.getDouble(2))
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val before = cosOf(vecs)
-    val after = cosOf(SimilarityOps.rotateLongBy(spark, vecs, "vec_id"))
-    assert(math.abs(before - after) < 1e-9, s"cos moved: $before vs $after")
-  }
-
   // ---- memo lifecycle under memory pressure (VERDICT r8 stretch #8) -------
 
   test("Memos.release prevents eviction churn under a constrained budget (forked JVM)") {
