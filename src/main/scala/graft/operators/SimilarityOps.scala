@@ -7326,10 +7326,10 @@ object SimilarityOps {
     * K ≫ nprobe the probed-cell row count IS the scan bound and a
     * clear-margin query pays half the rows for the same recall
     * (measured scanned-row fractions in SCALE.md; at sf0.1's K = 10 the
-    * wall delta is plan-floor-dominated, which is why the depth-routed
-    * serve ships as a non-default option — SCALE.md "Dispatch-aware
-    * probe depth"). Census work: margins ride the one
-    * coarse-scoring pass every routed batch already pays. */
+    * wall delta is plan-floor-dominated — SCALE.md "Dispatch-aware probe
+    * depth"). `routeAndServe(depthAware = true)` serves by this rule.
+    * Census work: margins ride the one coarse-scoring pass every routed
+    * batch already pays. */
   def probeDepthPlan(spark: SparkSession, dir: String): DataFrame =
     tierFeatures(spark, dir)
       .select(col("qid"), col("margin"), col("coverage"),
@@ -7345,11 +7345,6 @@ object SimilarityOps {
        |       ELSE $NProbeServe END AS BIGINT) AS np_depth
        |FROM tft ORDER BY qid""".stripMargin
 
-  /** The serving-side coarse rank frame for a request batch. */
-  private[graft] def crankFrameFor(
-      spark: SparkSession, indexDir: String, queries: DataFrame): DataFrame =
-    crankOf(indexMeta(spark, indexDir, "centroids"), qxOf(queries))
-
   /** Per-request probe depths — the q207 rule over the SERVED features
     * (identical r6 arithmetic to the panel census, so a query that IS a
     * panel vector gets its q207 depth bit-for-bit; Round16Spec pins
@@ -7359,27 +7354,6 @@ object SimilarityOps {
     servedTierFeatures(spark, indexDir, queries)
       .select(col("query_id"), depthOfMargin(col("margin")).as("np_depth"))
 
-  /** Float IVF batch serving with PER-QUERY probe depth (the q207
-    * dispatch): one coarse-scoring pass feeds both the margin features
-    * and the probe sets (the routeAndServe single-pass discipline), the
-    * per-query crank filter replaces the fixed `crank <= nprobe`, and
-    * the scan/rank plan is [[annIvfServeMany]]'s own via sharedProbes —
-    * so answers at a given depth are bit-identical to the fixed-depth
-    * tier at that depth. Non-default: at small K the fixed plan's floor
-    * dominates and this adds a census join; it pays where K ≫ nprobe
-    * (see q207's scaladoc). */
-  def annIvfServeManyDepth(
-      spark: SparkSession, indexDir: String, queries: DataFrame): DataFrame = {
-    val crankF = crankFrameFor(spark, indexDir, queries).localCheckpoint(true)
-    val feats = servedTierFeaturesFrom(spark, indexDir, queries, crankF)
-    val probes = crankF
-      .join(broadcast(feats.select(col("query_id"),
-        depthOfMargin(col("margin")).as("np_depth"))), "query_id")
-      .filter(col("crank") <= col("np_depth"))
-      .select("query_id", "cluster")
-    annIvfServeMany(spark, indexDir, queries, sharedProbes = Some(probes))
-  }
-
   // ---- q209: composed tier × depth dispatch (r17 — VERDICT r16 #3) ---------
 
   /** q209: the COMPOSED dispatch table — per panel query, WHICH tier
@@ -7387,7 +7361,7 @@ object SimilarityOps {
     * own economics) AND how deep that tier probes (q207's margin rule).
     * The routed batch computes one census pass; pre-r17 it priced the
     * tier knob and threw the margin away for the probe knob on every
-    * arm except the non-default float option — this census gates the
+    * arm — this census gates the
     * two knobs multiplied, which is what `routeAndServe(depthAware =
     * true)` dispatches (Round17Spec pins routed answers ≡ the fixed
     * tier served at each query's own composed depth). Census work: one

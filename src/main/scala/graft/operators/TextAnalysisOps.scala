@@ -1197,7 +1197,7 @@ object TextAnalysisOps {
       .orderBy("doc_id")
   }
 
-  val cleanTextSql: String = {
+  lazy val cleanTextSql: String = {
     val ws = s"${TextOps.WsClass}+"
     val cleaned = s"""trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(lower(text),
        |    '$CleanUrlRe', ' ', 'g'), '$PiiEmailRe', ' ', 'g'), '$CleanPunctRe', '.', 'g'), '$ws', ' ', 'g'))"""

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +12,11 @@ import graft.stats.{GramIndex, TokenIndex}
 import graft.telemetry.TelemetryStore
 
 /** End-to-end wiring of the adaptive retrieval engine: the reference's two
-  * entry points re-expressed as lazy DataFrame plans
-  * (/root/reference/src/beyond_vector_search/run.py:16-73,
-  *  /root/reference/src/beyond_vector_search/evaluate.py:16-116).
+  * entry points (reference run.py:16-73 and evaluate.py:16-116). Spark
+  * builds the indexes and runs the batch evaluate-and-update pass as
+  * DataFrame plans; the online `runOnce` serves from the in-memory
+  * [[ServeSnapshot]] of the built indexes and leaves Spark only the label
+  * lookup and the telemetry append.
   */
 object Pipeline {
 
@@ -46,8 +48,11 @@ object Pipeline {
     spark.read.schema(labelSchema).json(path)
 
   /** Built, cached retrieval indexes over a corpus
-    * (doc_id, title, text, doc_idx). */
-  final case class Indexes(docs: DataFrame, token: TokenIndex, gram: GramIndex)
+    * (doc_id, title, text, doc_idx). `serve` is their serving snapshot,
+    * collected by the first `runOnce` (once, however many callers race). */
+  final case class Indexes(docs: DataFrame, token: TokenIndex, gram: GramIndex) {
+    lazy val serve: ServeSnapshot = ServeSnapshot.collect(this)
+  }
 
   def buildIndexes(docs: DataFrame): Indexes = {
     val d = docs.cache()
@@ -163,10 +168,22 @@ object Pipeline {
     EvalOutcome(perQuery, mean, newState)
   }
 
+  /** The frame `runOnce` returns. */
+  val resultSchema: StructType = StructType(Seq(
+    StructField("query", StringType), StructField("strategy", StringType),
+    StructField("top_k", ArrayType(StructType(Seq(
+      StructField("doc_id", StringType), StructField("score", DoubleType))))),
+    StructField("answer", StringType), StructField("score", DoubleType),
+    StructField("context", StringType)))
+
   /** Single-query entry point (reference run.py:16-73). Routes with the
-    * current state, executes only the chosen arm, answers, scores if the
-    * query is labeled, and logs one run row. The driver-side branch on the
-    * 1-row routing decision mirrors the reference's dispatch.
+    * current state, scores only the chosen arm, answers, scores the answer
+    * if the query is labeled, and logs one run row. Routing, retrieval,
+    * the answer and its evaluation run over the in-memory serving snapshot;
+    * the Spark work per request is the label lookup and the telemetry
+    * append. The returned frame is a local relation: collecting it runs no
+    * job. With an empty top-k (e.g. an empty corpus) it still returns the
+    * fallback answer with score 0 and logs the run (run.py:63-73).
     */
   def runOnce(
       spark: SparkSession,
@@ -175,48 +192,22 @@ object Pipeline {
       store: TelemetryStore,
       query: String,
       k: Int = 5): DataFrame = {
-    import spark.implicits._
-
-    val queries = Seq(("q", query)).toDF("query_id", "query")
-    val state = store.loadRouterState()
-    val routed = Router.route(
-      Router.features(queries, idx.token.termStats.select("term"), idx.token.rareTerms),
-      state).cache()
-    val strategy = routed.select("strategy").collect()(0).getString(0)
-
-    val top = Retrievers.topK(armScores(strategy, queries, idx), k)
-    val topDocs = top.join(idx.docs.select("doc_id", "title", "text"), "doc_id")
-    val answers = Answer.generateAnswers(queries, topDocs)
-    val context = Answer.buildContext(topDocs)
+    val snap = idx.serve
+    val strategy = ServeSnapshot.route(snap.features(query), store.loadRouterState()).strategy
+    val scores = snap.scores(strategy, query)
+    val top = snap.topK(scores, k)
+    val answer = snap.answer(query, top)
 
     // Reference keeps ONE label per query text (dict, last insertion wins);
     // dedup deterministically on the highest query_id.
-    val labeled = labels.filter(col("query") === query)
+    val score = labels.filter(col("query") === query)
       .orderBy(col("query_id").desc).limit(1)
-      .select(col("query_id").as("label_id"), col("expected_doc_id"),
-        col("expected_answer"))
-    val scored =
-      if (labeled.isEmpty) answers.withColumn("score", lit(0.0))
-      else {
-        val lab = labeled.withColumn("query_id", lit("q"))
-        Evaluator.scores(top, answers, lab)
-          .select(col("query_id"), col("total").as("score"))
-          .join(answers, "query_id")
-      }
+      .select("expected_doc_id", "expected_answer").collect()
+      .headOption.fold(0.0)(l => snap.evaluate(top, answer, l.getString(0), l.getString(1)).total)
 
-    // Left joins + coalesce: with an empty top-k (e.g. empty corpus) the
-    // reference still returns the fallback answer with score 0 and logs the
-    // run (run.py:63-73) — inner joins would drop the row entirely.
-    val result = scored
-      .join(context, Seq("query_id"), "left")
-      .withColumn("context", coalesce(col("context"), lit("")))
-      .withColumn("strategy", lit(strategy))
-      .join(top.groupBy("query_id").agg(
-        transform(array_sort(collect_list(struct(col("rank"), col("doc_id"), col("score")))),
-          s => struct(s.getField("doc_id").as("doc_id"), s.getField("score").as("score")))
-          .as("top_k")), Seq("query_id"), "left")
-      .withColumn("top_k", coalesce(col("top_k"), expr("array()")))
-      .withColumn("query", lit(query))
+    val result = spark.createDataFrame(java.util.List.of(Row(query, strategy,
+      top.toSeq.map(i => Row(snap.docId(i), scores(i))), answer, score, snap.context(top))),
+      resultSchema)
 
     store.logRuns(result.select(
       current_timestamp().cast("double").as("ts_unix"),
@@ -225,6 +216,6 @@ object Pipeline {
         transform(col("top_k"), r => r.getField("doc_id")).as("top_doc_ids"),
         substring(col("context"), 1, 240).as("context_preview"))).as("meta_json")))
 
-    result.select("query", "strategy", "top_k", "answer", "score", "context")
+    result
   }
 }

@@ -1234,7 +1234,7 @@ object StreamingOps {
               // prices, slices too small to repay an arm's plan floor
               // fold into the surviving arms (the q203 census — fewer,
               // fuller plans per micro-batch).
-              // depthAware (r17, NON-DEFAULT like the q207 float option):
+              // depthAware (r17, non-default):
               // compose the q209 probe-depth rule into the routed
               // dispatch — each query's arm probes at its own margin
               // depth.

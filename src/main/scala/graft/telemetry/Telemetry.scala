@@ -64,8 +64,12 @@ final class ParquetTelemetryStore(spark: SparkSession, dir: String) extends Tele
     fs.exists(path)
   }
 
-  override def logRuns(runs: DataFrame): Unit =
+  /** One append at a time per store: concurrent appends to one path share
+    * its `_temporary` directory, and the first job to commit deletes it
+    * under the others. */
+  override def logRuns(runs: DataFrame): Unit = synchronized {
     runs.write.mode("append").parquet(runsPath)
+  }
 
   /** Inspection scan (reference notebooks/demo.py:285,315):
     * most recent n runs, newest first. */
@@ -163,12 +167,16 @@ final class JdbcTelemetryStore(spark: SparkSession, url: String,
   }
 }
 
-/** In-memory store for tests / ephemeral sessions. */
+/** In-memory store for tests / ephemeral sessions; safe for concurrent
+  * callers. */
 final class InMemoryTelemetryStore extends TelemetryStore {
-  private var state = RouterState()
+  @volatile private var state = RouterState()
   private val logged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  override def logRuns(runs: DataFrame): Unit = { logged += runs; runs.count(); () }
+  override def logRuns(runs: DataFrame): Unit = {
+    runs.count()
+    logged.synchronized { logged += runs }
+  }
   override def loadRouterState(): RouterState = state
   override def saveRouterState(s: RouterState): Unit = { state = s }
-  def runFrames: Seq[DataFrame] = logged.toSeq
+  def runFrames: Seq[DataFrame] = logged.synchronized(logged.toSeq)
 }

@@ -366,8 +366,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("q207 probe-depth dispatch ≡ the census: served depths equal the " +
-    "plan's np_depth for panel queries, and the depth-routed answers are " +
-    "bit-identical to the fixed tier at each query's own depth") {
+    "plan's np_depth for panel queries") {
     val idx = java.nio.file.Files.createTempDirectory("graft_r16_np").toString
     SimilarityOps.writeIndex(spark, sf, idx)
     import spark.implicits._
@@ -381,21 +380,5 @@ class Round16Spec extends SparkSpec {
         r.getAs[Long]("np_depth")).toMap
     assert(served == plan,
       s"served depths diverge from the q207 census: $served vs $plan")
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Long]("rank"), r.getAs[Double]("cos"))).toSeq
-      .groupBy(_._1)
-    val routed = rowsOf(SimilarityOps.annIvfServeManyDepth(spark, idx, qdf))
-    plan.values.toSet.foreach { (d: Long) =>
-      val qs = plan.collect { case (q, `d`) => q }.toSet
-      if (qs.nonEmpty) {
-        val fixed = rowsOf(SimilarityOps.annIvfServeMany(spark, idx, qdf,
-          nprobe = d.toInt)).filter { case (q, _) => qs(q) }
-        qs.foreach { q =>
-          assert(routed(q) == fixed(q),
-            s"query $q at depth $d: routed answers != fixed-depth answers")
-        }
-      }
-    }
   }
 }
