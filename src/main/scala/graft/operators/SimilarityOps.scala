@@ -5307,12 +5307,13 @@ object SimilarityOps {
   // bandit feedback (/root/reference/src/beyond_vector_search/router.py:
   // 72-117 heuristics+argmax, :141-163 weight update) — extended to the
   // four ANN serving tiers this engine already measures: float (q51),
-  // int8 (q77), pq (q104), pq_rerank (q111). Same architecture as the
-  // text-arm port (Router.scala): pure column arithmetic end-to-end, a
-  // commutative delta fold, and every stage oracle-expressible.
+  // int8 (q77), pq (q104), pq_rerank (q111). Same design as the text-arm
+  // port (Router.scala: column heuristics and argmax, the commutative
+  // delta fold of `Router.update`), here pure column arithmetic end-to-end
+  // with every stage oracle-expressible.
 
   /** The five serving tiers in the fixed tie-break order (ascending name —
-    * the Router.updateDeltas convention). `binary` is the round-12 arm:
+    * the `Router.update` convention). `binary` is the round-12 arm:
     * the q192/q193 sign-code tier served by [[annBinaryServe]]. */
   val Tiers: Seq[String] = Seq("binary", "float", "int8", "pq", "pq_rerank")
 
@@ -5777,7 +5778,7 @@ object SimilarityOps {
   // ---- q187: pass-2 routing under PERSISTED tier state (VERDICT r10 #2b) --
 
   /** The q185 fold as exact e4 integers, collected driver-side — 4 rows,
-    * the same driver-scale read as the text router's applyDeltas
+    * the same driver-scale fold as the text router's `Router.update`
     * (Router.scala). Rides the memoized recall panel. */
   private[graft] def tierFoldE4(spark: SparkSession, dir: String): Map[String, Long] =
     tierRecallPanel(spark, dir).groupBy("tier")

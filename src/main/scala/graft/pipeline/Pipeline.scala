@@ -1,22 +1,22 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.answer.Answer
-import graft.evalr.Evaluator
 import graft.retrieve.Retrievers
 import graft.router.{Router, RouterState}
 import graft.stats.{GramIndex, TokenIndex}
 import graft.telemetry.TelemetryStore
 
 /** End-to-end wiring of the adaptive retrieval engine: the reference's two
-  * entry points (reference run.py:16-73 and evaluate.py:16-116). Spark
-  * builds the indexes and runs the batch evaluate-and-update pass as
-  * DataFrame plans; the online `runOnce` serves from the in-memory
-  * [[ServeSnapshot]] of the built indexes and leaves Spark only the label
-  * lookup and the telemetry append.
+  * entry points (reference run.py:16-73 and evaluate.py:16-116). Both
+  * halves of the loop, the online `runOnce` and the batch
+  * evaluate-and-update pass `evaluateAll`, run on the in-memory
+  * [[ServeSnapshot]] of the built indexes. Spark builds the indexes and
+  * does the label, router-state and telemetry I/O.
   */
 object Pipeline {
 
@@ -44,12 +44,16 @@ object Pipeline {
         col("d.text").as("text"), col("doc_idx"))
   }
 
+  /** The labels, read once into a local relation: filtering or collecting
+    * it runs no job. */
   def loadLabelsJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(labelSchema).json(path)
+    spark.createDataFrame(spark.read.schema(labelSchema).json(path).collect().toSeq.asJava,
+      labelSchema)
 
   /** Built, cached retrieval indexes over a corpus
     * (doc_id, title, text, doc_idx). `serve` is their serving snapshot,
-    * collected by the first `runOnce` (once, however many callers race). */
+    * collected by the first `runOnce` or `evaluateAll` (once, however many
+    * callers race). */
   final case class Indexes(docs: DataFrame, token: TokenIndex, gram: GramIndex) {
     lazy val serve: ServeSnapshot = ServeSnapshot.collect(this)
   }
@@ -73,7 +77,25 @@ object Pipeline {
   final case class EvalOutcome(
       perQuery: DataFrame, meanScore: Double, state: RouterState)
 
-  /** Batch evaluation + feedback (reference evaluate.py:16-116).
+  private val Arms = Seq("vector", "keyword", "hybrid")
+
+  /** `EvalOutcome.perQuery`'s columns, then the label's `expected_doc_id`
+    * for the run log. */
+  private val evalSchema: StructType = StructType(
+    Seq("query_id", "query").map(StructField(_, StringType)) ++
+      Seq(StructField("n_tokens", IntegerType)) ++
+      Seq("digit_ratio", "oov_ratio", "rare_ratio", "heuristic_keyword", "heuristic_vector",
+        "heuristic_hybrid", "score_keyword", "score_vector", "score_hybrid")
+        .map(StructField(_, DoubleType)) ++
+      Seq(StructField("strategy", StringType)) ++
+      Arms.flatMap(a => Seq("hit", "em", "total").map(m => StructField(s"${a}_$m", DoubleType)) :+
+        StructField(s"${a}_top_doc_ids", ArrayType(StringType))) ++
+      Seq(StructField("chosen_total", DoubleType), StructField("expected_doc_id", StringType)))
+
+  /** Batch evaluation + feedback (reference evaluate.py:16-116) over the
+    * serving snapshot: every label is routed and scored on all three arms
+    * on the driver; Spark reads the labels and the router state and writes
+    * the state and the run log.
     *
     * Semantics choice (documented in SURVEY.md §3.2): the reference routes
     * label i against state mutated by labels 1..i-1; the update deltas are
@@ -88,58 +110,40 @@ object Pipeline {
       labels: DataFrame,
       store: TelemetryStore,
       k: Int = 5): EvalOutcome = {
-
-    val queries = labels.select("query_id", "query")
-
-    // Each arm feeds the evaluator, the answers, the top-id aggregate, and
-    // (for kw/vec) the hybrid blend — cache the dense frames or Catalyst
-    // re-executes each scoring subtree 4-6x inside the armTotals plan.
-    val kw = Retrievers.keywordScores(queries, idx.token).cache()
-    val vec = Retrievers.vectorScores(queries, idx.gram).cache()
-    val hyb = Retrievers.hybridScores(kw, vec).cache()
-
-    def armEval(name: String, scores: DataFrame): DataFrame = {
-      val top = Retrievers.topK(scores, k).cache()
-      val topDocs = top.join(idx.docs.select("doc_id", "title", "text"), "doc_id")
-      val answers = Answer.generateAnswers(queries, topDocs)
-      val ev = Evaluator.scores(top, answers, labels)
-      val topIds = top.groupBy("query_id").agg(
-        transform(array_sort(collect_list(struct(col("rank"), col("doc_id")))),
-          s => s.getField("doc_id")).as(s"${name}_top_doc_ids"))
-      ev.select(col("query_id"),
-          col("hit_at_k").as(s"${name}_hit"),
-          col("exact_match").as(s"${name}_em"),
-          col("total").as(s"${name}_total"))
-        .join(topIds, "query_id")
-    }
-
-    val armTotals = armEval("vector", vec)
-      .join(armEval("keyword", kw), "query_id")
-      .join(armEval("hybrid", hyb), "query_id")
-      .cache()
-
+    val snap = idx.serve
     val state = store.loadRouterState()
-    val routed = Router.route(
-      Router.features(queries, idx.token.termStats.select("term"), idx.token.rareTerms),
-      state)
 
-    val perQuery = routed.join(armTotals, "query_id")
-      .withColumn("chosen_total",
-        when(col("strategy") === "vector", col("vector_total"))
-          .when(col("strategy") === "keyword", col("keyword_total"))
-          .otherwise(col("hybrid_total")))
-      .cache()
+    val evals = labels.select("query_id", "query", "expected_doc_id", "expected_answer")
+      .collect().toSeq.map { l =>
+        val q = l.getString(1)
+        require(q != null, s"evaluateAll: label ${l.getString(0)} has a null query")
+        val f = snap.features(q)
+        val r = ServeSnapshot.route(f, state)
+        val kw = snap.keyword(q)
+        val vec = snap.vector(q)
+        val arms = Seq(vec, kw, ServeSnapshot.blend(kw, vec)).map { scores =>
+          val top = snap.topK(scores, k)
+          snap.evaluate(top, snap.answer(q, top), l.getString(2), l.getString(3)) ->
+            top.toSeq.map(snap.docId)
+        }
+        val totals = arms.map(_._1.total)
+        val chosen = totals(Arms.indexOf(r.strategy))
+        val row = Row.fromSeq(Seq(l.getString(0), q, f.nTokens, f.digitRatio, f.oovRatio,
+          f.rareRatio, r.heuristicKeyword, r.heuristicVector, r.heuristicHybrid, r.scoreKeyword,
+          r.scoreVector, r.scoreHybrid, r.strategy) ++
+          arms.flatMap { case (e, ids) => Seq(e.hitAtK, e.exactMatch, e.total, ids) } ++
+          Seq(chosen, l.getString(2)))
+        (row, chosen, (totals(0), totals(1), totals(2)))
+      }
 
-    val mean = perQuery.agg(
-      coalesce(sum(col("chosen_total")), lit(0.0)) /
-        greatest(lit(1L), count(lit(1)))).collect()(0).getDouble(0)
+    val evaluated = spark.createDataFrame(evals.map(_._1).asJava, evalSchema)
+    val perQuery = evaluated.drop("expected_doc_id")
+    val mean = evals.map(_._2).sum / math.max(1, evals.size)
 
-    val newState = Router.applyDeltas(state,
-      Router.updateDeltas(armTotals, state.lr))
+    val newState = Router.update(state, evals.map(_._3))
     store.saveRouterState(newState)
 
-    val runs = perQuery
-      .join(labels.select("query_id", "expected_doc_id"), "query_id")
+    val runs = evaluated
       .select(
         current_timestamp().cast("double").as("ts_unix"),
         col("query"),
@@ -180,10 +184,11 @@ object Pipeline {
     * current state, scores only the chosen arm, answers, scores the answer
     * if the query is labeled, and logs one run row. Routing, retrieval,
     * the answer and its evaluation run over the in-memory serving snapshot;
-    * the Spark work per request is the label lookup and the telemetry
-    * append. The returned frame is a local relation: collecting it runs no
-    * job. With an empty top-k (e.g. an empty corpus) it still returns the
-    * fallback answer with score 0 and logs the run (run.py:63-73).
+    * the Spark work per request is the telemetry append (the label lookup
+    * runs none over [[loadLabelsJsonl]]'s local relation). The returned
+    * frame is a local relation: collecting it runs no job. With an empty
+    * top-k (e.g. an empty corpus) it still returns the fallback answer
+    * with score 0 and logs the run (run.py:63-73).
     */
   def runOnce(
       spark: SparkSession,
@@ -199,11 +204,11 @@ object Pipeline {
     val answer = snap.answer(query, top)
 
     // Reference keeps ONE label per query text (dict, last insertion wins);
-    // dedup deterministically on the highest query_id.
+    // dedup deterministically on the highest query_id, nulls last.
     val score = labels.filter(col("query") === query)
-      .orderBy(col("query_id").desc).limit(1)
-      .select("expected_doc_id", "expected_answer").collect()
-      .headOption.fold(0.0)(l => snap.evaluate(top, answer, l.getString(0), l.getString(1)).total)
+      .select("query_id", "expected_doc_id", "expected_answer").collect()
+      .maxByOption(l => Option(l.getString(0)))
+      .fold(0.0)(l => snap.evaluate(top, answer, l.getString(1), l.getString(2)).total)
 
     val result = spark.createDataFrame(java.util.List.of(Row(query, strategy,
       top.toSeq.map(i => Row(snap.docId(i), scores(i))), answer, score, snap.context(top))),

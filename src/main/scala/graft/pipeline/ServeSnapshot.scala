@@ -12,15 +12,16 @@ import org.apache.spark.sql.functions.col
 import graft.answer.Answer
 import graft.evalr.Evaluator
 import graft.retrieve.Retrievers
-import graft.router.RouterState
+import graft.router.{Router, RouterState}
 import graft.textops.TextOps
 
-/** The online path's read-only view of the built indexes: Spark builds,
-  * a plain JVM runtime serves. Collected once from the cached frames of
-  * [[Pipeline.Indexes]] (`idf`, `w` and `norm` are taken from the frames,
-  * not recomputed), it answers one question per call with no Spark job:
-  * features, route, the chosen arm's dense scores, stable top-k, answer,
-  * context and evaluation (reference run.py:16-73).
+/** The read-only view of the built indexes that both halves of the loop
+  * run on: Spark builds, a plain JVM runtime serves and scores. Collected
+  * once from the cached frames of [[Pipeline.Indexes]] (`idf`, `w` and
+  * `norm` are taken from the frames, not recomputed), it answers one
+  * question per call with no Spark job: features, route, an arm's dense
+  * scores, stable top-k, answer, context and evaluation (reference
+  * run.py:16-73, evaluate.py:16-116).
   *
   * Each step mirrors the operation order of the column expression it
   * stands for (`Router.features`/`route`, `Retrievers.*`, `Answer.*`,
@@ -98,11 +99,7 @@ final class ServeSnapshot private (
     dot
   }
 
-  /** `Retrievers.hybridScores`: per-arm min-max, then the 0.6/0.4 blend. */
-  def hybrid(query: String): Array[Double] = {
-    val kn = minMaxNorm(keyword(query)); val vn = minMaxNorm(vector(query))
-    Array.tabulate(size)(i => Retrievers.AlphaKeyword * kn(i) + Retrievers.AlphaVector * vn(i))
-  }
+  def hybrid(query: String): Array[Double] = blend(keyword(query), vector(query))
 
   def scores(strategy: String, query: String): Array[Double] = strategy match {
     case "keyword" => keyword(query)
@@ -242,9 +239,14 @@ object ServeSnapshot {
     val sk = hk + state.weightKeyword
     val sv = hv + state.weightVector
     val sh = hh + state.weightHybrid
-    val strategy =
-      if (sh >= sk && sh >= sv) "hybrid" else if (sk >= sv) "keyword" else "vector"
-    Routing(hk, hv, hh, sk, sv, sh, strategy)
+    Routing(hk, hv, hh, sk, sv, sh, Router.choose(sk, sv, sh))
+  }
+
+  /** `Retrievers.hybridScores` of one query's keyword and vector scores:
+    * per-arm min-max, then the 0.6/0.4 blend. */
+  def blend(keyword: Array[Double], vector: Array[Double]): Array[Double] = {
+    val kn = minMaxNorm(keyword); val vn = minMaxNorm(vector)
+    Array.tabulate(kn.length)(i => Retrievers.AlphaKeyword * kn(i) + Retrievers.AlphaVector * vn(i))
   }
 
   // ---- TextOps, term for term over one string ------------------------------

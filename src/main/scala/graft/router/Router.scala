@@ -13,9 +13,10 @@ final case class RouterState(
     lr: Double = 0.25)
 
 /** The adaptive router: query featurization, heuristic arm scores, learned
-  * weight addition, argmax with the reference's exact ≥ tie-break precedence
-  * (hybrid ≥ keyword ≥ vector), and the bandit-style weight update — all as
-  * pure column arithmetic over a (query_id, query) frame
+  * weight addition and argmax with the reference's exact ≥ tie-break
+  * precedence (hybrid ≥ keyword ≥ vector) as pure column arithmetic over a
+  * (query_id, query) frame, and the bandit-style weight update as a
+  * driver-side sum over one pass's arm totals
   * (/root/reference/src/beyond_vector_search/router.py:64-163,
   * text.py:32-41).
   */
@@ -94,44 +95,32 @@ object Router {
       .withColumn("strategy",
         chooseExpr(col("score_keyword"), col("score_vector"), col("score_hybrid")))
 
-  /** Bandit update deltas (router.py:120-163) for a frame of per-query arm
-    * totals (query_id, vector_total, keyword_total, hybrid_total).
-    * Winner = max score, ties broken by ascending strategy name
-    * ("hybrid" < "keyword" < "vector"); all-tied → no update; winner gets
-    * +lr, each of the 2 losers −lr/2.
-    *
-    * The deltas are data-independent of the current state, so the pass
-    * total is a commutative sum (SURVEY.md §3.2): aggregate once, apply
-    * once.
-    */
-  def updateDeltas(armTotals: DataFrame, lr: Double): DataFrame = {
-    val v = col("vector_total"); val k = col("keyword_total"); val h = col("hybrid_total")
-    val allTied = v === k && k === h
-    val winner =
-      when(h >= k && h >= v, "hybrid")
-        .when(k >= v, "keyword")
-        .otherwise("vector")
-    val dw = lit(lr); val dl = lit(-lr / 2.0)
-    armTotals
-      .withColumn("winner", when(allTied, lit(null)).otherwise(winner))
-      .select(
-        when(col("winner").isNull, 0.0)
-          .when(col("winner") === "vector", dw).otherwise(dl).as("d_vector"),
-        when(col("winner").isNull, 0.0)
-          .when(col("winner") === "keyword", dw).otherwise(dl).as("d_keyword"),
-        when(col("winner").isNull, 0.0)
-          .when(col("winner") === "hybrid", dw).otherwise(dl).as("d_hybrid"))
-      .agg(sum("d_vector").as("d_vector"), sum("d_keyword").as("d_keyword"),
-        sum("d_hybrid").as("d_hybrid"))
-  }
+  /** The argmax of [[chooseExpr]] over plain doubles. */
+  def choose(scoreKeyword: Double, scoreVector: Double, scoreHybrid: Double): String =
+    if (scoreHybrid >= scoreKeyword && scoreHybrid >= scoreVector) "hybrid"
+    else if (scoreKeyword >= scoreVector) "keyword"
+    else "vector"
 
-  /** Apply aggregated deltas (a 1-row frame) to a state. */
-  def applyDeltas(state: RouterState, deltas: DataFrame): RouterState = {
-    val r = deltas.collect()(0)
-    def d(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+  /** Bandit update (router.py:120-163) over one pass's per-query arm
+    * totals (vector, keyword, hybrid). Winner = [[choose]]'s `>=`
+    * precedence (hybrid, keyword, vector); all-tied → no update; winner
+    * gets +lr, each of the 2 losers −lr/2.
+    *
+    * The deltas do not depend on the current state, so the pass total is
+    * a commutative sum (SURVEY.md §3.2): summed once, applied once.
+    */
+  def update(state: RouterState, totals: Seq[(Double, Double, Double)]): RouterState = {
+    var dv, dk, dh = 0.0
+    totals.foreach { case (v, k, h) =>
+      if (!(v == k && k == h)) {
+        val w = choose(k, v, h)
+        def d(arm: String) = if (w == arm) state.lr else -state.lr / 2.0
+        dv += d("vector"); dk += d("keyword"); dh += d("hybrid")
+      }
+    }
     state.copy(
-      weightVector = state.weightVector + d(0),
-      weightKeyword = state.weightKeyword + d(1),
-      weightHybrid = state.weightHybrid + d(2))
+      weightVector = state.weightVector + dv,
+      weightKeyword = state.weightKeyword + dk,
+      weightHybrid = state.weightHybrid + dh)
   }
 }

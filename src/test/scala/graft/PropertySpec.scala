@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.retrieve.Retrievers
-import graft.router.Router
+import graft.router.{Router, RouterState}
 
 /** Property tests over the operators' algebraic invariants (SURVEY.md §5):
   * top-k stability, min-max normalization range/degenerate cases, bandit
@@ -78,12 +78,11 @@ class PropertySpec extends SparkSpec {
       h <- Gen.chooseNum(0.0, 1.0)
     } yield (v, k, h)
     check(Prop.forAll(Gen.listOfN(5, armGen)) { rows =>
-      val df = rows.toDF("vector_total", "keyword_total", "hybrid_total")
-      val d = Router.updateDeltas(df, lr = 0.25).collect()(0)
-      val total = d.getDouble(0) + d.getDouble(1) + d.getDouble(2)
+      val d = Router.update(RouterState(lr = 0.25), rows)
+      val total = d.weightVector + d.weightKeyword + d.weightHybrid
       val conserved = math.abs(total) < 1e-9
       if (rows.forall { case (v, k, h) => v == k && k == h })
-        conserved && d.getDouble(0) == 0.0 && d.getDouble(1) == 0.0 && d.getDouble(2) == 0.0
+        conserved && d.weightVector == 0.0 && d.weightKeyword == 0.0 && d.weightHybrid == 0.0
       else conserved
     })
   }

@@ -43,8 +43,7 @@ class ReferenceUnitSpec extends SparkSpec {
   test("bandit update: 4 keyword wins with lr=0.5 push keyword above both (test :40-53)") {
     var st = RouterState(lr = 0.5)
     (1 to 4).foreach { _ =>
-      val arms = Seq((0.0, 1.0, 0.25)).toDF("vector_total", "keyword_total", "hybrid_total")
-      st = Router.applyDeltas(st, Router.updateDeltas(arms, st.lr))
+      st = Router.update(st, Seq((0.0, 1.0, 0.25)))
     }
     assert(st.weightKeyword > st.weightVector)
     assert(st.weightKeyword > st.weightHybrid)

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -227,6 +232,34 @@ class Round15Spec extends SparkSpec {
         r.getAs[Long]("vec_id"), r.getAs[Double](scoreCol)))
     }.toSeq.sorted
     assert(got == exp, "routed answers diverged from the tiers' own plans")
+  }
+
+  test("routeAndServe(batchCost, sliceAware) from 4 threads on one session " +
+    "serves the serial answers and holds no persisted RDD after release") {
+    val panelIds = embOf.keys.toSeq.sorted
+    def serve(): Seq[(Long, Long, Long, Double, String)] =
+      SimilarityOps.routeAndServe(spark, idx, reqs(panelIds),
+        batchCost = true, sliceAware = true).collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"), r.getAs[Long]("vec_id"),
+          r.getAs[Double]("score"), r.getAs[String]("tier"))).sorted.toSeq
+    Memos.release(idx)
+    val heldBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val serial = serve()
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val concurrent = try {
+      Await.result(Future.sequence((0 until 4).map(_ => Future(serve()))), Duration(10, "min"))
+    } finally pool.shutdown()
+    concurrent.zipWithIndex.foreach { case (c, t) =>
+      assert(c == serial, s"thread $t answers diverged from the serial run")
+    }
+    // The index memos go with release; each request's localCheckpoint
+    // blocks go with its frames, through the ContextCleaner.
+    Memos.release(idx)
+    def held = spark.sparkContext.getPersistentRDDs.keySet.toSet -- heldBefore
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (held.nonEmpty && System.nanoTime() < deadline) { System.gc(); Thread.sleep(250) }
+    assert(held.isEmpty, s"persisted RDDs left after release: $held")
   }
 
   // ---- q204: the split plan IS the actuator's selection --------------------

@@ -265,6 +265,116 @@ class ServeSnapshotSpec extends SparkSpec {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- heldBefore).isEmpty)
   }
 
+  // ---- evaluateAll over the snapshot ---------------------------------------
+
+  /** One pass's run rows as `{pass, query, strategy, score, meta_json}` JSON
+    * lines (no `ts_unix`), in query_id order. */
+  private def runLines(store: InMemoryTelemetryStore, pass: Int): Seq[String] =
+    store.runFrames.last
+      .select(get_json_object(col("meta_json"), "$.query_id"),
+        to_json(struct(lit(pass).as("pass"), col("query"), col("strategy"), col("score"),
+          col("meta_json"))))
+      .collect().sortBy(_.getString(0)).map(_.getString(1)).toSeq
+
+  private def armColumns(out: Pipeline.EvalOutcome, metric: String): Seq[Double] =
+    out.perQuery.select(Seq("vector", "keyword", "hybrid").map(a => col(s"${a}_$metric")): _*)
+      .collect().toSeq.flatMap(r => (0 until 3).map(r.getDouble))
+
+  /** A run line with its three `top_doc_ids` arrays cut out, its query,
+    * and those arrays in vector, keyword, hybrid order. */
+  private def splitTopIds(lines: Seq[String]): Seq[(String, String, Seq[Seq[String]])] = {
+    val meta = from_json(col("l"), StructType(Seq(StructField("meta_json", StringType))))
+      .getField("meta_json")
+    lines.toDF("l").select(col("l"),
+      regexp_replace(col("l"), """\\"top_doc_ids\\":\[[^\]]*\]""", ""),
+      get_json_object(col("l"), "$.query"),
+      array(Seq("vector", "keyword", "hybrid").map(a =>
+        from_json(get_json_object(meta, s"$$.$a.top_doc_ids"), ArrayType(StringType))): _*))
+      .collect().toSeq.map(r =>
+        (r.getString(1), r.getString(2), r.getSeq[scala.collection.Seq[String]](3).map(_.toSeq)))
+  }
+
+  test("evaluateAll passes 1 and 2 write the parent's Spark-plan run rows (features, " +
+    "route_meta, per-arm totals and top-k ids) and leave no persisted RDD behind") {
+    val snap = idx.serve
+    val heldBefore = spark.sparkContext.getPersistentRDDs.size
+    val store = new InMemoryTelemetryStore
+    val got = (1 to 2).flatMap { pass =>
+      Pipeline.evaluateAll(spark, idx, labels, store, K)
+      runLines(store, pass)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == heldBefore)
+
+    val src = scala.io.Source.fromFile(TestSpark.resource("eval_runs.jsonl"), "UTF-8")
+    val want = try src.getLines().toVector finally src.close()
+    assert(got.size == want.size)
+    val posOf = (0 until snap.size).map(i => snap.docId(i) -> i).toMap
+    splitTopIds(got).zip(splitTopIds(want)).foreach {
+      case ((gRest, q, gIds), (wRest, _, wIds)) =>
+        // Byte-identical, except that the Spark plan ordered docs whose
+        // scores differ by an ulp of summation order (the templated
+        // DOC-020..DOC-027) by its partition-wise sums.
+        assert(gRest == wRest)
+        Seq("vector", "keyword", "hybrid").zip(gIds.zip(wIds)).foreach { case (arm, (g, w)) =>
+          val s = snap.scores(arm, q)
+          assert(g.size == w.size, s"$arm '$q'")
+          g.zip(w).foreach { case (gi, wi) =>
+            assert(gi == wi || math.abs(s(posOf(gi)) - s(posOf(wi))) <= 1e-9,
+              s"$arm '$q': id $gi vs $wi without a tie")
+          }
+        }
+    }
+  }
+
+  test("evaluateAll edge: zero labels give mean 0, unchanged weights and no run rows") {
+    val st = RouterState(0.1, -0.2, 0.3)
+    val store = new InMemoryTelemetryStore
+    store.saveRouterState(st)
+    val out = Pipeline.evaluateAll(spark, idx, labels.filter(lit(false)), store, K)
+    assert(out.meanScore == 0.0)
+    assert(out.state == st && store.loadRouterState() == st)
+    assert(out.perQuery.count() == 0)
+    assert(store.runFrames.map(_.count()).sum == 0)
+  }
+
+  test("evaluateAll edge: an empty corpus answers with the fallback, scores 0 on every " +
+    "arm and leaves the weights unchanged") {
+    val empty = Pipeline.buildIndexes(spark.createDataFrame(
+      java.util.List.of[Row](), Pipeline.docSchema).withColumn("doc_idx", lit(0L)))
+    val fallback = Seq(("Q-FB", "What is BM25 used for?", "DOC-001", Answer.Fallback))
+      .toDF("query_id", "query", "expected_doc_id", "expected_answer")
+    val store = new InMemoryTelemetryStore
+    val out = Pipeline.evaluateAll(spark, empty, labels.unionByName(fallback), store, K)
+    val rows = out.perQuery.collect()
+    assert(rows.length == 15)
+    rows.foreach { r =>
+      val em = if (r.getAs[String]("query_id") == "Q-FB") 1.0 else 0.0
+      Seq("vector", "keyword", "hybrid").foreach { a =>
+        assert(r.getAs[Double](s"${a}_hit") == 0.0)
+        assert(r.getAs[Double](s"${a}_em") == em, s"${r.getAs[String]("query_id")} $a")
+        assert(r.getAs[Double](s"${a}_total") == Evaluator.EmWeight * em)
+        assert(r.getAs[scala.collection.Seq[String]](s"${a}_top_doc_ids").isEmpty)
+      }
+    }
+    assert(out.meanScore == Evaluator.EmWeight / 15)
+    assert(out.state == RouterState())
+    assert(store.runFrames.map(_.count()).sum == 15)
+  }
+
+  test("evaluateAll edge: an expected doc absent from the corpus and a null expected " +
+    "answer score hit 0 and EM 0") {
+    val q = "What is BM25 used for?"
+    val odd = Seq[(String, String, String, String)](("X-1", q, "NO-SUCH-DOC", "no such answer"),
+      ("X-2", q, null, null)).toDF("query_id", "query", "expected_doc_id", "expected_answer")
+    val store = new InMemoryTelemetryStore
+    val out = Pipeline.evaluateAll(spark, idx, odd, store, K)
+    assert(armColumns(out, "hit").forall(_ == 0.0))
+    assert(armColumns(out, "em").forall(_ == 0.0))
+    assert(out.meanScore == 0.0)
+    assert(out.state == RouterState())
+    assert(store.runFrames.map(_.count()).sum == 2)
+  }
+
   private implicit class Single(rows: Array[Row]) {
     def single: Row = { assert(rows.length == 1, s"${rows.length} rows"); rows(0) }
   }
