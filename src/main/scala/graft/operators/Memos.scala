@@ -36,9 +36,6 @@ object Memos {
     * between corpora, never mid-query. The next memo lookup re-derives. */
   def release(dir: String): Int =
     synchronized { registry.iterator.map(_.evictDir(dir)).sum }
-
-  /** Session teardown: release every entry of every memo. */
-  def releaseAll(): Int = synchronized { registry.iterator.map(_.evictAll()).sum }
 }
 
 /** One memo: a concurrent map with an unpersist hook applied to evicted
@@ -97,12 +94,6 @@ final class Memo[V](unpersist: V => Unit) {
     val hit = m.keys.filter(_.endsWith(s":$dir")).toSeq
     hit.flatMap(m.remove).foreach(unpersist)
     hit.size
-  }
-
-  private[operators] def evictAll(): Int = synchronized {
-    val ks = m.keys.toSeq
-    ks.flatMap(m.remove).foreach(unpersist)
-    ks.size
   }
 }
 

@@ -6113,57 +6113,10 @@ object SimilarityOps {
       wE4: Map[String, Long] = Map.empty,
       nprobe: Int = NProbeServe,
       batchCost: Boolean = false,
-      sliceAware: Boolean = false,
-      depthAware: Boolean = false,
-      filterOp: Option[String] = None,
-      payloadFilters: Seq[PayloadFilter] = Nil,
-      overfetch: Int = FilterOverfetch): DataFrame = {
+      sliceAware: Boolean = false): DataFrame = {
     require(!sliceAware || batchCost,
       "sliceAware routing prices arm-opening floors against the BATCH " +
         "penalties — it requires batchCost = true")
-    filterOp.foreach(op => require(Set("le", "eq")(op),
-      s"unknown filter op: $op (one of le, eq)"))
-    require(filterOp.isEmpty || payloadFilters.isEmpty,
-      "pass filterOp (the label shorthand) OR payloadFilters, not both")
-    // filterOp / payloadFilters (r18 — VERDICT r17 #1/#2): the request
-    // frame additionally carries its predicate value columns, and ONE
-    // batch pass prices BOTH marquee knobs — the tier census (which
-    // arm) and the filter census (pre vs post). `filterOp` is the label
-    // shorthand (≡ payloadFilters = Seq(PayloadFilter("label", op,
-    // "flabel"))); `payloadFilters` is the generalized conjunctive
-    // form over the typed payload columns. Per query: strategy "pre"
-    // answers tier-independently from [[payloadPreArm]] (exact — no
-    // coded tier undercuts an exact answer), labeled with the query's
-    // routed tier for the record; strategy "post" dispatches to the
-    // ROUTED tier's [[payloadPostArm]] (the tier's own overfetched
-    // shortlist + predicate), carving its probe rows from the same
-    // shared crank as the unfiltered dispatch. The filter census is
-    // computed ONCE for the batch (bounded broadcast artifacts + a
-    // |Q|-row checkpoint), never per tier. Round18Spec pins routed
-    // filtered answers ≡ [[tierServeManyFiltered]] /
-    // [[tierServeManyFilteredBy]] of the routed tier per query; q211 /
-    // q214 are the hash gates.
-    val effFilters: Seq[PayloadFilter] =
-      if (payloadFilters.nonEmpty) { validatePayloadFilters(payloadFilters); payloadFilters }
-      else filterOp.map(op => Seq(PayloadFilter("label", op, "flabel")))
-        .getOrElse(Nil)
-    val filterCensus = if (effFilters.isEmpty) None else Some {
-      val q2 = queries.select(
-        col("query_id") +: effFilters.map(f =>
-          payloadValCast(f, col(f.valueCol)).as(f.valueCol)): _*)
-      payloadCensusOf(spark, indexDir, q2, effFilters, "auto")
-    }
-    val (filterPreVals, filterPreOn, _) = filterCensus
-      .map(c => payloadSlicesOf(c, effFilters))
-      .getOrElse((Map.empty[String, Array[Any]], false, false))
-    // The dispatch loop below serves only the POST slice when filtering;
-    // the pre slice unions in after it (its answers need no tier plan).
-    val dispatchQueries = filterCensus match {
-      case Some(census) => queries.join(
-        broadcast(census.filter(col("strategy") === "post").select("query_id")),
-        "query_id")
-      case None => queries
-    }
     val w = Tiers.map(t => t -> lit(wE4.getOrElse(t, 0L).toDouble / 10000.0)).toMap
     // ONE coarse-scoring job for the whole batch (r14 — VERDICT r13 #2):
     // the census's margin/coverage AND every tier's probe set read this
@@ -6171,25 +6124,11 @@ object SimilarityOps {
     // each of the five dispatched plans re-scored queries × centroids
     // independently — six broadcasts and six aggregates per batch.
     val cent = indexMeta(spark, indexDir, "centroids")
-    val crankDepth = math.max(
-      if (depthAware) math.max(DepthHi, nprobe) else nprobe,
-      math.max(NProbe, 2))
     val crank = crankOf(cent, qxOf(queries))
-      .filter(col("crank") <= crankDepth)
+      .filter(col("crank") <= math.max(nprobe, math.max(NProbe, 2)))
       .localCheckpoint(true)
     val feats = servedTierFeaturesFrom(spark, indexDir, queries, crank)
-    // depthAware (r17 — VERDICT r16 #3): the census margin this batch
-    // already computed prices the OTHER knob too — each query's probe
-    // set is carved at its own q207 depth instead of the fixed nprobe,
-    // for EVERY routed arm (all five tiers share the coarse probe), so
-    // the q209 composed table is exactly what dispatches. One broadcast
-    // join of two panel-sized frames; no new jobs.
-    val allProbes = (if (depthAware)
-        crank.join(broadcast(feats.select(col("query_id"),
-          depthOfMargin(col("margin")).as("np_depth"))), "query_id")
-          .filter(col("crank") <= col("np_depth"))
-      else crank.filter(col("crank") <= nprobe))
-      .select("query_id", "cluster")
+    val allProbes = crank.filter(col("crank") <= nprobe).select("query_id", "cluster")
     // batchCost routes with the amortized batch-of-20 penalties
     // ([[tierUtilitiesBatch]] / q200) — the correct cost model when the
     // dispatch target IS the batched plan; default stays the q184
@@ -6242,16 +6181,7 @@ object SimilarityOps {
               org.apache.spark.sql.types.StringType, nullable = false))))
       } else scored.select(col("query_id"), choice.as("tier")))
       .localCheckpoint(true)
-    // Only the DISPATCHED slice's tiers plan: with a filter predicate,
-    // pre-strategy queries never open a tier plan (their exact answer is
-    // tier-independent), so `present` counts post-strategy choices only.
-    val dispatchChoices = filterCensus match {
-      case Some(census) => choices.join(
-        broadcast(census.filter(col("strategy") === "post").select("query_id")),
-        "query_id")
-      case None => choices
-    }
-    val present = dispatchChoices.select("tier").distinct()
+    val present = choices.select("tier").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     // Thunks: only PRESENT tiers plan (each plan reads index metadata).
     // Every tier gets its slice's probe rows CARVED from the shared
@@ -6259,22 +6189,17 @@ object SimilarityOps {
     // frames) instead of re-scoring the centroids itself.
     def probesFor(slice: DataFrame): Option[DataFrame] =
       Some(allProbes.join(broadcast(slice.select("query_id")), "query_id"))
-    val serveManyOf: Map[String, (DataFrame => DataFrame, String)] =
-      if (effFilters.nonEmpty)
-        Tiers.map(t => t -> ((q: DataFrame) =>
-          payloadPostArm(spark, indexDir, t, q, filterCensus.get, effFilters,
-            nprobe, overfetch, probesFor(q)), "score")).toMap
-      else Map(
-          "binary" -> ((q: DataFrame) =>
-            annBinaryServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
-          "float" -> ((q: DataFrame) =>
-            annIvfServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
-          "int8" -> ((q: DataFrame) =>
-            annInt8ServeMany(spark, indexDir, q, nprobe, probesFor(q)), "qcos"),
-          "pq" -> ((q: DataFrame) =>
-            annPqServeMany(spark, indexDir, q, nprobe, probesFor(q)), "adist"),
-          "pq_rerank" -> ((q: DataFrame) =>
-            annPqRerankServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"))
+    val serveManyOf: Map[String, (DataFrame => DataFrame, String)] = Map(
+      "binary" -> ((q: DataFrame) =>
+        annBinaryServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
+      "float" -> ((q: DataFrame) =>
+        annIvfServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
+      "int8" -> ((q: DataFrame) =>
+        annInt8ServeMany(spark, indexDir, q, nprobe, probesFor(q)), "qcos"),
+      "pq" -> ((q: DataFrame) =>
+        annPqServeMany(spark, indexDir, q, nprobe, probesFor(q)), "adist"),
+      "pq_rerank" -> ((q: DataFrame) =>
+        annPqRerankServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"))
     // Dispatch the present tiers CONCURRENTLY: each routed group's plan
     // is materialized by its own action (eager localCheckpoint of a
     // ≤ |Q|·TopK frame) on a separate thread, so the batch's wall time
@@ -6306,7 +6231,7 @@ object SimilarityOps {
           s"routeAndServe dispatch: $t", interruptOnCancel = true)
         try {
           val (serve, scoreCol) = serveManyOf(t)
-          serve(routedSlice(dispatchQueries, choices, t))
+          serve(routedSlice(queries, choices, t))
             .withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
             .localCheckpoint(true)
         } finally spark.sparkContext.clearJobGroup()
@@ -6322,41 +6247,19 @@ object SimilarityOps {
               "serve request aborted")
       }
     }
-    // The filtered pre slice unions in after the tier dispatch: one
-    // shared exact arm for the whole batch (tier-independent answers,
-    // labeled with each query's routed tier for the record).
-    val preParts = if (!filterPreOn) Nil else {
-      val preSlice = queries.join(
-        broadcast(filterCensus.get.filter(col("strategy") === "pre")
-          .select("query_id")), "query_id")
-        .select(col("query_id") +: col("embedding") +:
-          effFilters.map(f => payloadValCast(f, col(f.valueCol)).as(f.valueCol)): _*)
-      val preDf = payloadPreArm(spark, indexDir, preSlice, effFilters,
-          filterPreVals)
-        .select(col("query_id"), col("vec_id"),
-          col("rank").cast("long").as("rank"),
-          r6(col("cos")).as("score"), col("strategy"))
-        .join(broadcast(choices), "query_id")
-      Seq(preDf.localCheckpoint(true))
-    }
-    val allParts = parts ++ preParts
     // An empty request frame routes nowhere — answer with an empty frame
     // of the output schema instead of crashing reduce. query_id keeps
     // the CALLER's type (the tier plans propagate it on non-empty
     // input; a hardcoded type here would make alternating empty and
     // non-empty batches schema-conflict in an appending sink).
-    if (allParts.isEmpty) {
-      if (effFilters.nonEmpty) emptyFilteredFrame(spark, queries, "score",
-        withTier = true)
-      else {
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            queries.schema("query_id").copy(name = "query_id"),
-            StructField("vec_id", LongType), StructField("rank", LongType),
-            StructField("score", DoubleType), StructField("tier", StringType))))
-      }
-    } else allParts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
+    if (parts.isEmpty) {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(
+          queries.schema("query_id").copy(name = "query_id"),
+          StructField("vec_id", LongType), StructField("rank", LongType),
+          StructField("score", DoubleType), StructField("tier", StringType))))
+    } else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
   }
 
   /** Dedicated bounded pool for the routed per-tier dispatch: at most
@@ -6575,14 +6478,12 @@ object SimilarityOps {
     * is read back as a double (dsum's trailing cast), and every
     * tie-break is (value, tier-name ASC). */
   private[graft] def sliceCollapseLocal(
-      ub: Seq[(Any, Seq[Double])],
-      arms: Seq[String] = Tiers,
-      openE4: Map[String, Long] = TierOpenE4): Map[Any, String] = {
+      ub: Seq[(Any, Seq[Double])]): Map[Any, String] = {
     if (ub.isEmpty) return Map.empty // empty batch routes nowhere
     val ord: Ordering[(Double, String)] = Ordering.Tuple2(
       Ordering.Double.TotalOrdering.reverse, Ordering.String)
     val rankedPer: Seq[(Any, Seq[(String, Double)])] = ub.map { case (q, us) =>
-      q -> arms.zip(us).sortBy { case (t, u) => (u, t) }(ord)
+      q -> Tiers.zip(us).sortBy { case (t, u) => (u, t) }(ord)
     }
     def dec8(d: Double): java.math.BigDecimal =
       java.math.BigDecimal.valueOf(d).setScale(8, java.math.RoundingMode.HALF_UP)
@@ -6595,7 +6496,7 @@ object SimilarityOps {
     val majority = slices.toSeq
       .sortBy { case (t, (n, _)) => (-n, t) }.head._1
     val kept = slices.collect { case (t, (_, gain))
-      if gain >= openE4(t).toDouble / 10000.0 || t == majority => t }.toSet
+      if gain >= TierOpenE4(t).toDouble / 10000.0 || t == majority => t }.toSet
     rankedPer.map { case (q, s) =>
       q -> s.collectFirst { case (t, _) if kept(t) => t }.get
     }.toMap
@@ -7102,10 +7003,10 @@ object SimilarityOps {
     * slice-collapse economics unchanged (the hybrid arm's opening floor
     * measured like every tier's). Census columns: the rare-term mass,
     * the hybrid utility next to the five batch utilities, pass-1 arm,
-    * slice economics, and the final collapsed dispatch.
-    * [[routeAndServeText]] is spec-pinned to `tier_final`. Census work:
-    * the text feature is one |vocab|-row broadcast join over the
-    * panel's distinct tokens — the vector features' shape exactly. */
+    * slice economics, and the final collapsed dispatch. No serve path
+    * routes by it (SCALE.md §21). Census work: the text feature is one
+    * |vocab|-row broadcast join over the panel's distinct tokens — the
+    * vector features' shape exactly. */
   def textRoutePlan(spark: SparkSession, dir: String): DataFrame = {
     // The text feature reads the MEMOIZED token index (the q20-q29
     // retrieval infrastructure): docTermFreq is already one row per
@@ -7212,78 +7113,6 @@ object SimilarityOps {
        |ORDER BY s12.qid""".stripMargin
   }
 
-  /** Route-then-serve for requests carrying BOTH a text and an
-    * embedding (r18 — VERDICT r17 stretch #7): the six-arm census over
-    * the persisted indexes — vector features from the IVF index's own
-    * coarse scoring ([[servedTierFeatures]]), the rare-mass text
-    * feature from the persisted token catalog's term stats (a
-    * |vocab|-row broadcast — no corpus pass) — then the q203 collapse
-    * (driver-side [[sliceCollapseLocal]] over the |Q|·6 utilities) and
-    * each slice dispatched to ITS arm's own batched plan: the five
-    * vector tiers' ServeMany, or [[graft.operators.RetrievalOps
-    * .hybridServeMany]] off the bucketed token+gram tables. Answers
-    * normalize to (query_id, vec_id, rank, score, tier) — vec_id IS
-    * doc_id in the corpus's shared id space; `score` is the arm's own
-    * ranking value (cos/qcos/adist/rrf — compare ranks across arms).
-    * Round18Spec pins choices ≡ q213's `tier_final` and answers ≡ each
-    * arm's own plan over its slice. */
-  def routeAndServeText(
-      spark: SparkSession, indexDir: String,
-      tokPrefix: String, gramPrefix: String,
-      queries: DataFrame, wE4: Map[String, Long] = Map.empty,
-      nprobe: Int = NProbeServe): DataFrame = {
-    val tok = graft.stats.IndexStore.load(spark, tokPrefix)
-    val q2 = queries.select(col("query_id"), col("text"), col("embedding"))
-      .localCheckpoint(true)
-    val qtk = q2.select(col("query_id"),
-      explode(array_distinct(graft.textops.TextOps.tokenize(col("text"))))
-        .as("term"))
-    val rm = qtk
-      .join(broadcast(tok.termStats.select(col("term"), col("df"))),
-        Seq("term"), "left")
-      .groupBy("query_id")
-      .agg(rareMassAgg(col("df"), lit(tok.nDocs.toDouble)).as("rare_mass"))
-    val w = SixArms.map(t =>
-      t -> lit(wE4.getOrElse(t, 0L).toDouble / 10000.0)).toMap
-    val scored = tierUtilitiesBatch(
-        servedTierFeatures(spark, indexDir, q2), w)
-      .join(rm, Seq("query_id"), "left")
-      .withColumn("rare_mass", coalesce(col("rare_mass"), lit(0.0)))
-      .withColumn("ub_hybrid", ubHybridOf(col("rare_mass"), w(HybridArm)))
-    val ub = scored.select(
-      col("query_id") +: SixArms.map(t => col(s"ub_$t")): _*)
-      .collect().map(r => (r.get(0), (1 to SixArms.size).map(r.getDouble)))
-    val choice = sliceCollapseLocal(ub.toSeq, SixArms, sixArmOpenE4)
-    val present = choice.values.toSeq.distinct.sorted
-    def slice(arm: String): DataFrame = {
-      val ids = choice.collect { case (q, a) if a == arm => q }.toSeq
-      q2.filter(col("query_id").isin(ids: _*))
-    }
-    val parts = present.map {
-      case HybridArm =>
-        graft.operators.RetrievalOps.hybridServeMany(spark, tokPrefix,
-            gramPrefix, slice(HybridArm)
-              .select(col("query_id"), col("text").as("query")))
-          .select(col("qid").as("query_id"), col("doc_id").as("vec_id"),
-            col("rank"), col("rrf").as("score"),
-            lit(HybridArm).as("tier"))
-      case t =>
-        val s = slice(t).select("query_id", "embedding")
-        val (df, scoreCol) = t match {
-          case "float" => (annIvfServeMany(spark, indexDir, s, nprobe), "cos")
-          case "binary" => (annBinaryServeMany(spark, indexDir, s, nprobe), "cos")
-          case "int8" => (annInt8ServeMany(spark, indexDir, s, nprobe), "qcos")
-          case "pq" => (annPqServeMany(spark, indexDir, s, nprobe), "adist")
-          case "pq_rerank" =>
-            (annPqRerankServeMany(spark, indexDir, s, nprobe), "cos")
-        }
-        df.withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
-    }
-    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "score",
-      withTier = true).drop("strategy")
-    else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
-  }
-
   // ---- q207: dispatch-aware probe depth (r16 — VERDICT r15 stretch #7) ----
 
   /** Probe-depth policy constants. A query with a HIGH coarse margin
@@ -7308,9 +7137,8 @@ object SimilarityOps {
   final val DepthMarginLo = 0.01
 
   /** The depth rule — one CASE over the r6'd margin, shared verbatim by
-    * the q207 census, its SQL twin, and the serving dispatch
-    * ([[probeDepthOf]]), so the census IS the dispatcher's behavior.
-    * private[graft] so Round16Spec can pin all three arms — the shallow
+    * the q207 and q209 censuses and their SQL twins. private[graft] so
+    * Round16Spec can pin all three arms — the shallow
     * arm fires on no sf-corpus query by design (see the threshold
     * scaladoc) and must not rot untested. */
   private[graft] def depthOfMargin(margin: Column): Column =
@@ -7328,9 +7156,10 @@ object SimilarityOps {
     * clear-margin query pays half the rows for the same recall
     * (measured scanned-row fractions in SCALE.md; at sf0.1's K = 10 the
     * wall delta is plan-floor-dominated — SCALE.md "Dispatch-aware probe
-    * depth"). `routeAndServe(depthAware = true)` serves by this rule.
-    * Census work: margins ride the one coarse-scoring pass every routed
-    * batch already pays. */
+    * depth"). No serve path probes by this rule: routed at this
+    * corpus's K it measured 13–31 % slower than the fixed depth
+    * (SCALE.md §8, §11). Census work: margins ride the one
+    * coarse-scoring pass every routed batch already pays. */
   def probeDepthPlan(spark: SparkSession, dir: String): DataFrame =
     tierFeatures(spark, dir)
       .select(col("qid"), col("margin"), col("coverage"),
@@ -7346,15 +7175,6 @@ object SimilarityOps {
        |       ELSE $NProbeServe END AS BIGINT) AS np_depth
        |FROM tft ORDER BY qid""".stripMargin
 
-  /** Per-request probe depths — the q207 rule over the SERVED features
-    * (identical r6 arithmetic to the panel census, so a query that IS a
-    * panel vector gets its q207 depth bit-for-bit; Round16Spec pins
-    * it). */
-  def probeDepthOf(
-      spark: SparkSession, indexDir: String, queries: DataFrame): DataFrame =
-    servedTierFeatures(spark, indexDir, queries)
-      .select(col("query_id"), depthOfMargin(col("margin")).as("np_depth"))
-
   // ---- q209: composed tier × depth dispatch (r17 — VERDICT r16 #3) ---------
 
   /** q209: the COMPOSED dispatch table — per panel query, WHICH tier
@@ -7362,10 +7182,8 @@ object SimilarityOps {
     * own economics) AND how deep that tier probes (q207's margin rule).
     * The routed batch computes one census pass; pre-r17 it priced the
     * tier knob and threw the margin away for the probe knob on every
-    * arm — this census gates the
-    * two knobs multiplied, which is what `routeAndServe(depthAware =
-    * true)` dispatches (Round17Spec pins routed answers ≡ the fixed
-    * tier served at each query's own composed depth). Census work: one
+    * arm — this census gates the two knobs multiplied. No serve path
+    * dispatches by it (SCALE.md §11). Census work: one
     * projection over frames q203/q207 already compute. */
   def tierDepthPlan(spark: SparkSession, dir: String): DataFrame =
     tierRouteSlice(spark, dir).select(col("qid"), col("tier_final"))
@@ -7655,20 +7473,17 @@ object SimilarityOps {
     * alternating empty/non-empty batches never schema-conflict in an
     * appending sink. */
   private def emptyFilteredFrame(
-      spark: SparkSession, queries: DataFrame, scoreName: String,
-      withTier: Boolean = false): DataFrame = {
+      spark: SparkSession, queries: DataFrame, scoreName: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
         queries.schema("query_id").copy(name = "query_id"),
         StructField("vec_id", LongType), StructField("rank", LongType),
-        StructField(scoreName, DoubleType), StructField("strategy", StringType)) ++
-        (if (withTier) Seq(StructField("tier", StringType)) else Nil)))
+        StructField(scoreName, DoubleType), StructField("strategy", StringType))))
   }
 
-  /** The tier's batched shortlist plan + its native score column +
-    * whether that score ranks ASCENDING (pq's adist) — the one table
-    * the filtered twins and the routed filtered dispatch share (measured
+  /** The tier's batched shortlist plan over the given probe rows + its
+    * native score column — the one table the filtered twins share (measured
     * in SCALE.md "Filtered ANN serving") so they can never disagree on a
     * tier's overfetch shape.
     * `depth` caps: the binary and pq_rerank shortlists pass through a
@@ -7676,27 +7491,24 @@ object SimilarityOps {
     * min(depth, RerankK). */
   private def tierShortlistOf(
       spark: SparkSession, indexDir: String, tier: String, slice: DataFrame,
-      nprobe: Int, depth: Int,
-      sharedProbes: Option[DataFrame]): (DataFrame, String, Boolean) =
+      nprobe: Int, depth: Int, probes: DataFrame): (DataFrame, String) = {
+    val p = Some(probes)
     tier match {
       case "float" =>
-        (annIvfServeMany(spark, indexDir, slice, nprobe, sharedProbes, depth),
-          "cos", false)
+        (annIvfServeMany(spark, indexDir, slice, nprobe, p, depth), "cos")
       case "binary" =>
-        (annBinaryServeMany(spark, indexDir, slice, nprobe, sharedProbes, depth),
-          "cos", false)
+        (annBinaryServeMany(spark, indexDir, slice, nprobe, p, depth), "cos")
       case "int8" =>
-        (annInt8ServeMany(spark, indexDir, slice, nprobe, sharedProbes, depth),
-          "qcos", false)
+        (annInt8ServeMany(spark, indexDir, slice, nprobe, p, depth), "qcos")
       case "pq" =>
-        (annPqServeMany(spark, indexDir, slice, nprobe, sharedProbes, depth),
-          "adist", true)
+        (annPqServeMany(spark, indexDir, slice, nprobe, p, depth), "adist")
       case "pq_rerank" =>
-        (annPqRerankServeMany(spark, indexDir, slice, nprobe, sharedProbes,
-          depth = depth), "cos", false)
+        (annPqRerankServeMany(spark, indexDir, slice, nprobe, p, depth = depth),
+          "cos")
       case other => throw new IllegalArgumentException(
         s"unknown tier: $other (one of ${Tiers.mkString(", ")})")
     }
+  }
 
   /** The POST arm for any tier: the tier's own overfetched shortlist
     * (depth = overfetch × TopK), the predicate applied on a label
@@ -7709,10 +7521,9 @@ object SimilarityOps {
     * [[filterStrategyOf]] boundary. */
   private def filterPostArm(
       spark: SparkSession, indexDir: String, tier: String, postSlice: DataFrame,
-      census: DataFrame, op: String, nprobe: Int, overfetch: Int,
-      sharedProbes: Option[DataFrame] = None): DataFrame =
+      census: DataFrame, op: String, nprobe: Int, overfetch: Int): DataFrame =
     payloadPostArm(spark, indexDir, tier, postSlice, census,
-      Seq(PayloadFilter("label", op, "flabel")), nprobe, overfetch, sharedProbes)
+      Seq(PayloadFilter("label", op, "flabel")), nprobe, overfetch)
 
   /** Filtered serving for ANY of the five tiers (r18 — VERDICT r17 #1:
     * "the engine's two marquee dispatches are mutually exclusive on the
@@ -7733,7 +7544,7 @@ object SimilarityOps {
     * adist ranks ascending; compare ranks, not scores, across tiers).
     * Round18Spec pins tier="float" ≡ [[annIvfServeManyFiltered]] per
     * query, each forced post arm ≡ its analytic derivation, and the
-    * routed filtered dispatch ≡ this twin per routed query. */
+    * q211 census's post rows ≡ this twin at their `tier_final`. */
   def tierServeManyFiltered(
       spark: SparkSession, indexDir: String, queries: DataFrame,
       tier: String = "float", op: String = "le", strategy: String = "auto",
@@ -7778,10 +7589,8 @@ object SimilarityOps {
     * + shortlist-order re-rank. Pre-r18 the engine's two marquee
     * censuses — which tier (q203/q209) and which filter arm (q208) —
     * were mutually exclusive on a request; this census oracle-gates
-    * their product, which is exactly what `routeAndServe(filterOp =
-    * Some("le"))` dispatches (Round18Spec pins routed filtered answers
-    * ≡ each routed tier's [[tierServeManyFiltered]] per query, and this
-    * census ≡ the twins on an index built from the same corpus).
+    * their product (Round18Spec pins its post rows ≡ each routed tier's
+    * [[tierServeManyFiltered]] on an index built from the same corpus).
     * `score` is the serving tier's own ranking value (cos / qcos /
     * adist — adist ranks ASCENDING; compare ranks across tiers, not
     * scores). Census work: selectivities from a |labels|-row broadcast;
@@ -8007,10 +7816,10 @@ object SimilarityOps {
     * predicate values, the product estimate, the q208 pre/post
     * strategy, the routed tier, and the answers the composed dispatch
     * serves — pre exact, post the routed tier's own overfetched
-    * shortlist + predicate + shortlist-order re-rank. Exactly what
-    * `routeAndServe(payloadFilters = conj)` dispatches (Round18Spec
-    * pins it); the answer machinery is [[composedFilterAnswers]], the
-    * q211 core with the predicate generalized. */
+    * shortlist + predicate + shortlist-order re-rank (Round18Spec pins
+    * its post rows ≡ [[tierServeManyFilteredBy]] at their
+    * `tier_final`); the answer machinery is [[composedFilterAnswers]],
+    * the q211 core with the predicate generalized. */
   def payloadTierPlan(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val d = spark.read.parquet(s"$dir/documents.parquet")
@@ -8521,12 +8330,12 @@ object SimilarityOps {
     * order (the [[filterPostArm]] contract, N conjuncts). */
   private def payloadPostArm(
       spark: SparkSession, indexDir: String, tier: String, postSlice: DataFrame,
-      census: DataFrame, filters: Seq[PayloadFilter], nprobe: Int, overfetch: Int,
-      sharedProbes: Option[DataFrame] = None): DataFrame = {
+      census: DataFrame, filters: Seq[PayloadFilter], nprobe: Int,
+      overfetch: Int): DataFrame = {
     val cent = indexMeta(spark, indexDir, "centroids")
-    val probes = sharedProbes.getOrElse(probesMany(cent, qxOf(postSlice), nprobe))
-    val (shortlist, scoreCol, _) = tierShortlistOf(
-      spark, indexDir, tier, postSlice, nprobe, TopK * overfetch, Some(probes))
+    val probes = probesMany(cent, qxOf(postSlice), nprobe)
+    val (shortlist, scoreCol) = tierShortlistOf(
+      spark, indexDir, tier, postSlice, nprobe, TopK * overfetch, probes)
     val qvals = census.select(
       col("query_id") +:
         filters.map(f => payloadValCast(f, col(f.valueCol)).as(s"q_${f.valueCol}")): _*)

@@ -1182,14 +1182,14 @@ object StreamingOps {
     * feedback-persists contract) and dispatches each routed group to
     * its tier's batched plan (SimilarityOps.routeAndServe — where
     * `tier` records each query's routed arm, vs the fixed tier name
-    * here). Auto routes at q200's BATCH prices by
-    * default (`batchCost` — this stream dispatches the batched plans,
-    * so their amortized prices are the correct cost model). */
+    * here). Auto routes at q200's BATCH prices with the q203 slice
+    * collapse (`batchCost = true, sliceAware = true` — this stream
+    * dispatches the batched plans, so their amortized prices are the
+    * correct cost model). */
   def annServe(
       queries: DataFrame, indexDir: String, outDir: String,
       nprobe: Int = graft.operators.SimilarityOps.NProbeServe,
-      tier: String = "float", stateDir: Option[String] = None,
-      batchCost: Boolean = true, depthAware: Boolean = false)
+      tier: String = "float", stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.SimilarityOps
     val known = SimilarityOps.Tiers.toSet + "auto"
@@ -1221,8 +1221,8 @@ object StreamingOps {
             case "auto" =>
               val w = stateDir.map(SimilarityOps.loadTierState(s, _))
                 .getOrElse(Map.empty[String, Long])
-              // batchCost defaults TRUE here (unlike routeAndServe):
-              // the stream dispatches the batched micro-batch plans, so
+              // Batch prices (unlike routeAndServe's default): the
+              // stream dispatches the batched micro-batch plans, so
               // q200's amortized prices are the correct cost model.
               // Dispatch stays EAGER (concurrent per-tier actions):
               // ServeProbe measured the lazy single-job union faster
@@ -1230,17 +1230,11 @@ object StreamingOps {
               // slower under co-tenant load (1593 vs 1342; 1983 vs
               // 1574) — concurrent actions hold scheduler slots better
               // when contended, which is what production looks like.
-              // sliceAware rides batchCost (r15): when routing at batch
-              // prices, slices too small to repay an arm's plan floor
-              // fold into the surviving arms (the q203 census — fewer,
-              // fuller plans per micro-batch).
-              // depthAware (r17, non-default):
-              // compose the q209 probe-depth rule into the routed
-              // dispatch — each query's arm probes at its own margin
-              // depth.
+              // The slice collapse (r15): slices too small to repay an
+              // arm's plan floor fold into the surviving arms (the q203
+              // census — fewer, fuller plans per micro-batch).
               SimilarityOps.routeAndServe(s, indexDir, reqs, w, nprobe,
-                batchCost = batchCost, sliceAware = batchCost,
-                depthAware = depthAware)
+                batchCost = true, sliceAware = true)
             case "binary" =>
               SimilarityOps.annBinaryServeMany(s, indexDir, reqs, nprobe)
                 .withColumnRenamed("cos", "score").withColumn("tier", lit(tier))

@@ -132,36 +132,6 @@ object ServeProbe {
       SimilarityOps.routeAndServe(spark, idx, qdf, batchCost = true,
         sliceAware = true).collect()
     }
-    // r17: the composed tier × depth dispatch (q209) vs the plain
-    // sliced route — the marginal cost of pricing the probe knob from
-    // the census the batch already pays for.
-    time("routed_slice_depth_batch20_ms") {
-      SimilarityOps.routeAndServe(spark, idx, qdf, batchCost = true,
-        sliceAware = true, depthAware = true).collect()
-    }
-    // r18 stretch (VERDICT r17 #7): the SIX-ARM routed wall — requests
-    // carrying (text, embedding) through routeAndServeText: the five
-    // vector tiers plus the persisted hybrid text arm, slice-collapse
-    // economics included. Compare against routed_slice_batch20_ms (the
-    // five-arm shipped shape): the delta is the price of the text
-    // feature + the hybrid slice's own plan when it stays open.
-    if (only.isEmpty || only.exists("sixarm_routed_batch20_ms".contains)) {
-      import graft.operators.RetrievalOps
-      graft.stats.IndexStore.save(spark,
-        RetrievalOps.tokenIndex(spark, dir), "probe_six_tok")
-      graft.stats.IndexStore.saveGram(spark,
-        RetrievalOps.gramIndex(spark, dir), "probe_six_gram")
-      val textPanel = spark.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") < SimilarityOps.NPanel)
-        .join(spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id").as("vec_id"), col("text")), "vec_id")
-        .select(col("vec_id").as("query_id"), col("text"), col("embedding"))
-        .localCheckpoint(true)
-      time("sixarm_routed_batch20_ms") {
-        SimilarityOps.routeAndServeText(spark, idx,
-          "probe_six_tok", "probe_six_gram", textPanel).collect()
-      }
-    }
     // Per-tier batch-of-20 rows — the q200 penalty inputs, re-measured
     // here after the r14 int8 rewrite so the census can be re-pinned
     // from the shipped plans' actual prices.

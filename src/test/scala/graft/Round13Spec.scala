@@ -165,11 +165,12 @@ class Round13Spec extends SparkSpec {
       assert(viaStream(q) == single, s"query $q: streamed pq_rerank diverged")
     }
     val auto = streamed("auto")
-    // The streaming auto tier routes at BATCH prices by default — its
-    // micro-batches dispatch the batched plans, so q200's amortized
-    // cost model is the correct one (the int8 inversion).
+    // The streaming auto tier routes at BATCH prices with the slice
+    // collapse — its micro-batches dispatch the batched plans, so
+    // q200's amortized cost model is the correct one (the int8
+    // inversion), and sub-economic slices fold (q203).
     val batch = SimilarityOps.routeAndServe(spark, idx, reqs(qids),
-        batchCost = true).collect()
+        batchCost = true, sliceAware = true).collect()
       .groupBy(_.getAs[Long]("query_id")).map { case (k, rs) =>
         k -> rs.sortBy(_.getAs[Long]("rank"))
           .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"))).toSeq

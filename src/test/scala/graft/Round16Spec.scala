@@ -375,7 +375,9 @@ class Round16Spec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("qid") -> r.getAs[Long]("np_depth")).toMap
     assert(plan.values.toSet.subsetOf(Set(SimilarityOps.DepthLo.toLong,
       SimilarityOps.NProbeServe.toLong, SimilarityOps.DepthHi.toLong)))
-    val served = SimilarityOps.probeDepthOf(spark, idx, qdf)
+    val served = SimilarityOps.servedTierFeatures(spark, idx, qdf)
+      .select(col("query_id"),
+        SimilarityOps.depthOfMargin(col("margin")).as("np_depth"))
       .collect().map(r => r.getAs[Long]("query_id") ->
         r.getAs[Long]("np_depth")).toMap
     assert(served == plan,

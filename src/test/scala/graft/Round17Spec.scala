@@ -262,47 +262,31 @@ class Round17Spec extends SparkSpec {
     assert(dups == 0L, s"$dups duplicate vec_ids after the fold")
   }
 
-  // ---- q209: composed tier × depth dispatch (VERDICT r16 #3) ---------------
+  // ---- q209: composed tier × depth census (VERDICT r16 #3) -----------------
 
-  test("depth-aware routed dispatch ≡ the q209 composed table: per " +
-    "query the routed arm is q209's tier_final AND the answers are " +
-    "bit-identical to that fixed tier served at the query's own " +
-    "np_depth — one census pass prices both knobs") {
-    import spark.implicits._
+  test("q209 composes q203 × q207 per panel query: tier_final ≡ q203's " +
+    "tier_final and np_depth ≡ q207's np_depth, one row per query, the " +
+    "fixture exercising >1 depth") {
     val plan = SimilarityOps.tierDepthPlan(spark, sf).collect()
       .map(r => r.getAs[Long]("qid") ->
-        (r.getAs[String]("tier_final"), r.getAs[Long]("np_depth"))).toMap
-    assert(plan.values.map(_._2).toSet.size >= 2,
-      s"fixture should exercise >1 depth: $plan")
-    val qdf = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") < SimilarityOps.NPanel)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-      .localCheckpoint(true)
-    val routed = SimilarityOps.routeAndServe(spark, idx, qdf,
-      batchCost = true, sliceAware = true, depthAware = true).collect()
-    val routedTiers = routed.map(r =>
-      r.getAs[Long]("query_id") -> r.getAs[String]("tier")).toMap
-    assert(routedTiers == plan.map { case (q, (t, _)) => q -> t },
-      s"routed arms diverged from q209: $routedTiers")
-    val serveAt: Map[String, (org.apache.spark.sql.DataFrame, Int) =>
-        org.apache.spark.sql.DataFrame] = Map(
-      "binary" -> ((q, np) => SimilarityOps.annBinaryServeMany(spark, idx, q, np)),
-      "float" -> ((q, np) => SimilarityOps.annIvfServeMany(spark, idx, q, np)),
-      "int8" -> ((q, np) => SimilarityOps.annInt8ServeMany(spark, idx, q, np)),
-      "pq" -> ((q, np) => SimilarityOps.annPqServeMany(spark, idx, q, np)),
-      "pq_rerank" -> ((q, np) =>
-        SimilarityOps.annPqRerankServeMany(spark, idx, q, np)))
-    plan.groupBy { case (_, (t, d)) => (t, d) }.foreach { case ((t, d), qs) =>
-      val slice = qdf.filter(col("query_id").isin(qs.keys.toSeq: _*))
-      val fixed = serveAt(t)(slice, d.toInt).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-      val got = routed.filter(r => qs.contains(r.getAs[Long]("query_id")))
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-      assert(got == fixed,
-        s"composed dispatch != fixed tier $t at depth $d for ${qs.keys}")
-    }
+        (r.getAs[String]("tier_final"), r.getAs[Long]("np_depth")))
+    val planMap = plan.toMap
+    assert(planMap.size == plan.length, "duplicate qid rows in q209")
+    val tiers = SimilarityOps.tierRouteSlice(spark, sf).collect()
+      .map(r => r.getAs[Long]("qid") -> r.getAs[String]("tier_final")).toMap
+    val depths = SimilarityOps.probeDepthPlan(spark, sf).collect()
+      .map(r => r.getAs[Long]("qid") -> r.getAs[Long]("np_depth")).toMap
+    assert(planMap.keySet == tiers.keySet && planMap.keySet == depths.keySet,
+      s"q209 covers ${planMap.size} queries, q203 ${tiers.size}, q207 ${depths.size}")
+    assert(planMap.map { case (q, (t, _)) => q -> t } == tiers,
+      "q209 tier_final diverged from q203")
+    assert(planMap.map { case (q, (_, d)) => q -> d } == depths,
+      "q209 np_depth diverged from q207")
+    assert(planMap.values.map(_._2).toSet.subsetOf(Set(
+      SimilarityOps.DepthLo.toLong, SimilarityOps.NProbeServe.toLong,
+      SimilarityOps.DepthHi.toLong)))
+    assert(planMap.values.map(_._2).toSet.size >= 2,
+      s"fixture should exercise >1 depth: $planMap")
   }
 
   // ---- horizon-free live TVD (VERDICT r16 #4) -------------------------------

@@ -112,28 +112,18 @@ class Round18Spec extends SparkSpec {
 
   // ---- q211: composed filter × tier dispatch (VERDICT r17 #1) ---------------
 
-  test("routed filtered dispatch ≡ the q211 census AND ≡ each routed " +
-    "tier's own filtered twin per query — the two marquee dispatches " +
-    "compose on one request") {
+  test("q211's post rows ≡ tierServeManyFiltered of their tier_final — " +
+    "the composed census answers each post query from its routed " +
+    "tier's own filtered twin") {
     val census = SimilarityOps.filterTierPlan(spark, sf).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank")) ->
         (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[String]("tier_final"))).toMap
-    val routed = SimilarityOps.routeAndServe(spark, idx,
-      panelQueries.select("query_id", "embedding", "flabel"),
-      batchCost = true, sliceAware = true, filterOp = Some("le")).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[String]("tier")))
-    assert(routed.nonEmpty)
-    val routedMap = routed.toMap
-    assert(routedMap.size == routed.length, "duplicate (query, rank) rows")
-    assert(routedMap.map { case (k, (v, s, _)) => k -> (v, s) } ==
-      census.map { case (k, (v, s, _)) => k -> (v, s) },
-      s"routed filtered answers diverged from q211: ${routedMap.size} vs ${census.size}")
-    // Post queries ride their ROUTED tier: answers ≡ the fixed tier's
-    // own filtered twin, per tier.
-    val postTiers = routedMap.collect {
+          r.getAs[String]("tier_final")))
+    val censusMap = census.toMap
+    assert(censusMap.size == census.length, "duplicate (query, rank) rows")
+    assert(censusMap.values.map(_._2).toSet == Set("pre", "post"),
+      "both filter arms should fire on the q208 fixture")
+    val postTiers = censusMap.collect {
       case ((qid, _), (_, "post", tier)) => qid -> tier
     }.toSeq.distinct.groupBy(_._2)
     assert(postTiers.nonEmpty, "no post queries routed — fixture degenerate")
@@ -143,11 +133,11 @@ class Round18Spec extends SparkSpec {
         panelQueries.filter(col("query_id").isin(ids.toSeq: _*)), tier = tier)
         .collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-      val mine = routedMap.collect {
-        case ((qid, rank), (vid, _, _)) if ids(qid) => (qid, rank) -> vid
+          (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"))).toMap
+      val mine = censusMap.collect {
+        case ((qid, rank), (vid, st, _)) if ids(qid) => (qid, rank) -> (vid, st)
       }
-      assert(mine == twin, s"routed tier $tier ≠ its fixed filtered twin")
+      assert(mine == twin, s"q211 post rows at tier $tier ≠ its filtered twin")
     }
   }
 
@@ -236,32 +226,18 @@ class Round18Spec extends SparkSpec {
 
   // ---- q214: generalized payload × routed tier ------------------------------
 
-  test("routed dispatch with GENERALIZED payload filters ≡ the q214 " +
-    "census AND ≡ the routed tier's generalized filtered twin — the " +
-    "conjunctive predicate rides the tier lattice end to end") {
+  test("q214's post rows ≡ tierServeManyFilteredBy of their tier_final " +
+    "— the conjunctive predicate rides the tier lattice end to end") {
     val conj = Seq(PayloadFilter("lang", "eq", "flang"),
       PayloadFilter("n_chars", "le", "fchars"))
     val census = SimilarityOps.payloadTierPlan(spark, sf).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank")) ->
         (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[String]("tier_final"))).toMap
-    assert(census.nonEmpty)
-    val routed = SimilarityOps.routeAndServe(spark, idx,
-      panelQueries.select("query_id", "embedding", "flang", "fchars"),
-      batchCost = true, sliceAware = true, payloadFilters = conj).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[String]("tier")))
-    val routedMap = routed.toMap
-    assert(routedMap.size == routed.length, "duplicate (query, rank) rows")
-    assert(routedMap.map { case (k, (v, s, _)) => k -> (v, s) } ==
-      census.map { case (k, (v, s, _)) => k -> (v, s) },
-      s"routed generalized answers diverged from q214: " +
-        s"${routedMap.size} vs ${census.size}")
-    // Both arms fire, and post queries match their routed tier's own
-    // generalized twin.
-    assert(routedMap.values.map(_._2).toSet == Set("pre", "post"))
-    val postTiers = routedMap.collect {
+          r.getAs[String]("tier_final")))
+    val censusMap = census.toMap
+    assert(censusMap.size == census.length, "duplicate (query, rank) rows")
+    assert(censusMap.values.map(_._2).toSet == Set("pre", "post"))
+    val postTiers = censusMap.collect {
       case ((qid, _), (_, "post", tier)) => qid -> tier
     }.toSeq.distinct.groupBy(_._2)
     postTiers.foreach { case (tier, qids) =>
@@ -270,86 +246,29 @@ class Round18Spec extends SparkSpec {
         panelQueries.filter(col("query_id").isin(ids.toSeq: _*)),
         conj, tier = tier).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-      val mine = routedMap.collect {
-        case ((qid, rank), (vid, _, _)) if ids(qid) => (qid, rank) -> vid
+          (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"))).toMap
+      val mine = censusMap.collect {
+        case ((qid, rank), (vid, st, _)) if ids(qid) => (qid, rank) -> (vid, st)
       }
       assert(mine == twin,
-        s"routed tier $tier ≠ its generalized filtered twin")
+        s"q214 post rows at tier $tier ≠ its generalized filtered twin")
     }
-    // The label shorthand and the explicit conjunct list are the same
-    // dispatch (filterOp ≡ payloadFilters degenerate case).
-    val viaOp = SimilarityOps.routeAndServe(spark, idx,
-      panelQueries.select("query_id", "embedding", "flabel"),
-      batchCost = true, sliceAware = true, filterOp = Some("le")).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        r.getAs[Long]("vec_id")).toMap
-    val viaFilters = SimilarityOps.routeAndServe(spark, idx,
-      panelQueries.select("query_id", "embedding", "flabel"),
-      batchCost = true, sliceAware = true,
-      payloadFilters = Seq(PayloadFilter("label", "le", "flabel"))).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        r.getAs[Long]("vec_id")).toMap
-    assert(viaOp.nonEmpty && viaOp == viaFilters,
-      "filterOp shorthand diverged from the explicit label conjunct")
   }
 
   // ---- q213: six-arm census — hybrid joins the lattice (VERDICT r17 #7) -----
 
-  test("six-arm routed dispatch ≡ the q213 census: rare-term queries " +
-    "ride the hybrid arm (answers ≡ hybridServeMany), the rest their " +
-    "routed vector tier (answers ≡ the tier's own plan)") {
-    import graft.operators.RetrievalOps
-    graft.stats.IndexStore.save(spark,
-      RetrievalOps.tokenIndex(spark, sf), "r18_six_tok")
-    graft.stats.IndexStore.saveGram(spark,
-      RetrievalOps.gramIndex(spark, sf), "r18_six_gram")
+  test("q213 six-arm census: some query routes hybrid, and a query " +
+    "routes hybrid iff its rare-term mass is positive") {
     val census = SimilarityOps.textRoutePlan(spark, sf).collect()
       .map(r => r.getAs[Long]("qid") ->
         (r.getAs[String]("tier_final"), r.getAs[Double]("rare_mass"))).toMap
     // The fixture genuinely exercises the sixth arm: rare-mass queries
     // exist and route hybrid; zero-mass queries never do.
-    val hybridQs = census.collect { case (q, ("hybrid", _)) => q }.toSet
-    assert(hybridQs.nonEmpty, "no query routed hybrid — fixture degenerate")
+    assert(census.values.exists(_._1 == "hybrid"),
+      "no query routed hybrid — fixture degenerate")
     census.foreach { case (q, (t, rm)) =>
       assert((t == "hybrid") == (rm > 0.0),
         s"q$q: rare_mass=$rm routed $t — membership rule broken")
-    }
-    val queries = spark.read.parquet(s"$sf/embeddings.parquet")
-      .filter(col("vec_id") < SimilarityOps.NPanel)
-      .join(spark.read.parquet(s"$sf/documents.parquet")
-        .select(col("doc_id").as("vec_id"), col("text")), "vec_id")
-      .select(col("vec_id").as("query_id"), col("text"), col("embedding"))
-      .localCheckpoint(true)
-    val routed = SimilarityOps.routeAndServeText(
-      spark, idx, "r18_six_tok", "r18_six_gram", queries).collect()
-    val routedTier = routed.map(r =>
-      r.getAs[Long]("query_id") -> r.getAs[String]("tier")).distinct.toMap
-    assert(routedTier == census.map { case (q, (t, _)) => q -> t },
-      "routed arm choices diverged from the q213 census")
-    // Answers ≡ each arm's own plan over its slice.
-    val routedAns = routed.map(r =>
-      (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        r.getAs[Long]("vec_id")).toMap
-    val hybridSlice = queries
-      .filter(col("query_id").isin(hybridQs.toSeq: _*))
-      .select(col("query_id"), col("text").as("query"))
-    val hybridOwn = RetrievalOps.hybridServeMany(spark,
-      "r18_six_tok", "r18_six_gram", hybridSlice).collect()
-      .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank")) ->
-        r.getAs[Long]("doc_id")).toMap
-    assert(hybridOwn.nonEmpty && hybridOwn.forall { case (k, v) =>
-      routedAns.get(k).contains(v) },
-      "hybrid slice answers diverged from hybridServeMany")
-    val floatQs = census.collect { case (q, ("float", _)) => q }.toSeq
-    if (floatQs.nonEmpty) {
-      val own = SimilarityOps.annIvfServeMany(spark, idx,
-        queries.filter(col("query_id").isin(floatQs: _*))
-          .select("query_id", "embedding")).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-          r.getAs[Long]("vec_id")).toMap
-      assert(own.forall { case (k, v) => routedAns.get(k).contains(v) },
-        "float slice answers diverged from the tier's own plan")
     }
   }
 
