@@ -78,18 +78,21 @@ final class Memo[V](unpersist: V => Unit) {
     * — audited r15: no plain memo is invalidated by streaming
     * maintenance). Any memo a maintenance thread (writeIndex rebuild,
     * ingest, compaction) can invalidate mid-session MUST go through
-    * getOrElseUpdateSync — today that set is exactly indexMetaCache and
-    * clusterSizeCache, plus tierCache (promoted r15: its values are
-    * eager localCheckpoints, the block-leak case).
+    * getOrElseUpdateSync — today the index memos indexMetaCache,
+    * clusterSizeCache, labelSizeCache, payloadSizeCache and upsertCache,
+    * plus tierCache (promoted r15: its values are eager
+    * localCheckpoints, the block-leak case). Other memos whose values
+    * are checkpointed frames (kmeansCache, pqCache and the per-ops
+    * caches) use it for that block-leak reason too.
     *
     * Accepted tradeoff: the lock is INSTANCE-wide, so evicting dir A can
     * wait behind an in-flight Sync compute for an unrelated dir B on the
     * same memo. A per-key lock would not close the race (eviction cannot
     * know the key a not-yet-inserted compute is about to add for its
     * dir). The wait is bounded by the largest Sync cold compute, and the
-    * Sync users (indexMeta, clusterSizeCache) compute metadata-scale
-    * reads — the one corpus-scale case is clusterSizeCache's transitional
-    * pre-artifact heal recount. */
+    * index memos compute metadata-scale reads — the corpus-scale cases
+    * are the transitional pre-artifact heal recounts of the cluster,
+    * label and payload sizes. */
   private[operators] def evictDir(dir: String): Int = synchronized {
     val hit = m.keys.filter(_.endsWith(s":$dir")).toSeq
     hit.flatMap(m.remove).foreach(unpersist)

@@ -2209,7 +2209,7 @@ object SimilarityOps {
   //
   // Per-label vector counts over the index's filter payload — the
   // SELECTIVITY ESTIMATOR the filtered serve's pre-vs-post dispatch
-  // reads ([[annIvfServeManyFiltered]]): a |labels|-row broadcast
+  // reads ([[tierServeManyFilteredBy]]): a |labels|-row broadcast
   // frame, the cluster_sizes recipe applied to the label column, so no
   // filtered request ever pays a corpus pass to learn how selective its
   // predicate is. Written at build, refreshed where cluster_sizes is
@@ -6085,6 +6085,35 @@ object SimilarityOps {
     nf.join(mgcov, "query_id")
   }
 
+  /** The one tier → batched-plan table: `tier`'s ServeMany over
+    * `queries` at `nprobe` probes, or over the caller's probe rows, taken
+    * `depth` deep, with the tier's native score column (cos / qcos /
+    * adist) renamed to `score`. Returns (query_id, vec_id, rank, score);
+    * `score` keeps tier-native semantics (adist ranks ascending). The
+    * binary and pq_rerank shortlists pass through a [[RerankK]]-deep
+    * first stage, so their effective depth is min(depth, RerankK).
+    * routeAndServe, the filtered post arm and the streaming fixed-tier
+    * serve all dispatch through it. */
+  private[graft] def tierServeMany(
+      spark: SparkSession, indexDir: String, tier: String, queries: DataFrame,
+      nprobe: Int, probes: Option[DataFrame], depth: Int): DataFrame = {
+    val (served, scoreCol) = tier match {
+      case "float" =>
+        (annIvfServeMany(spark, indexDir, queries, nprobe, probes, depth), "cos")
+      case "binary" =>
+        (annBinaryServeMany(spark, indexDir, queries, nprobe, probes, depth), "cos")
+      case "int8" =>
+        (annInt8ServeMany(spark, indexDir, queries, nprobe, probes, depth), "qcos")
+      case "pq" =>
+        (annPqServeMany(spark, indexDir, queries, nprobe, probes, depth), "adist")
+      case "pq_rerank" =>
+        (annPqRerankServeMany(spark, indexDir, queries, nprobe, probes, depth), "cos")
+      case other => throw new IllegalArgumentException(
+        s"unknown tier: $other (one of ${Tiers.mkString(", ")})")
+    }
+    served.withColumnRenamed(scoreCol, "score")
+  }
+
   /** The reference's core dispatch — choose a strategy, then RUN it
     * (run.py:28-33 routing into the chosen retriever,
     * router.py:94-105's utility argmax) — applied to the vector serving
@@ -6189,17 +6218,6 @@ object SimilarityOps {
     // frames) instead of re-scoring the centroids itself.
     def probesFor(slice: DataFrame): Option[DataFrame] =
       Some(allProbes.join(broadcast(slice.select("query_id")), "query_id"))
-    val serveManyOf: Map[String, (DataFrame => DataFrame, String)] = Map(
-      "binary" -> ((q: DataFrame) =>
-        annBinaryServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
-      "float" -> ((q: DataFrame) =>
-        annIvfServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"),
-      "int8" -> ((q: DataFrame) =>
-        annInt8ServeMany(spark, indexDir, q, nprobe, probesFor(q)), "qcos"),
-      "pq" -> ((q: DataFrame) =>
-        annPqServeMany(spark, indexDir, q, nprobe, probesFor(q)), "adist"),
-      "pq_rerank" -> ((q: DataFrame) =>
-        annPqRerankServeMany(spark, indexDir, q, nprobe, probesFor(q)), "cos"))
     // Dispatch the present tiers CONCURRENTLY: each routed group's plan
     // is materialized by its own action (eager localCheckpoint of a
     // ≤ |Q|·TopK frame) on a separate thread, so the batch's wall time
@@ -6230,9 +6248,9 @@ object SimilarityOps {
         spark.sparkContext.setJobGroup(group,
           s"routeAndServe dispatch: $t", interruptOnCancel = true)
         try {
-          val (serve, scoreCol) = serveManyOf(t)
-          serve(routedSlice(queries, choices, t))
-            .withColumnRenamed(scoreCol, "score").withColumn("tier", lit(t))
+          val slice = routedSlice(queries, choices, t)
+          tierServeMany(spark, indexDir, t, slice, nprobe, probesFor(slice), TopK)
+            .withColumn("tier", lit(t))
             .localCheckpoint(true)
         } finally spark.sparkContext.clearJobGroup()
       }(tierDispatchPool))
@@ -7223,7 +7241,7 @@ object SimilarityOps {
   final val FilterSelPre = 0.25 // = 1.0 / FilterOverfetch
 
   /** The dispatch rule — shared verbatim by the q208 census, its SQL
-    * twin, and [[annIvfServeManyFiltered]], so the census IS the
+    * twin, and [[tierServeManyFilteredBy]], so the census IS the
     * dispatcher's behavior. */
   private[graft] def filterStrategyOf(sel: Column): Column =
     when(sel <= FilterSelPre, lit("pre")).otherwise(lit("post"))
@@ -7239,62 +7257,53 @@ object SimilarityOps {
     * pre = exact cosine over the predicate's rows; post = the
     * [[NProbeServe]]-probed IVF shortlist at [[FilterOverfetch]]× TopK
     * depth, THEN the predicate, re-ranked (a post answer may hold fewer
-    * than TopK rows — the recall loss, shown honestly). Census work:
-    * selectivities are a |labels|-row broadcast; the arms run only over
-    * their routed slice. */
+    * than TopK rows — the recall loss, shown honestly). The answers are
+    * the float row of the q211 machinery: the plan is checkpointed with
+    * `tier_final = 'float'` and answered by [[composedFilterAnswers]],
+    * whose `score` is q208's r6'd `cos`. Census work: selectivities are
+    * a |labels|-row broadcast; the arms run only over their routed
+    * slice. */
   def filteredServePlan(spark: SparkSession, dir: String): DataFrame = {
-    val (kcent, kasg) = kmeansModel(spark, dir)
+    val plan = labelFilterSel(spark, dir)
+      .withColumn("tier_final", lit("float"))
+      .localCheckpoint(true)
+    labelFilterAnswers(spark, dir, plan)
+      .select(col("qid"), col("flabel"), col("sel"), col("strategy"),
+        col("rank").cast("long").as("rank"), col("vec_id"), col("score").as("cos"))
+      .orderBy("qid", "rank")
+  }
+
+  /** The q208/q211 label-filter dispatch columns: per panel query its
+    * own label as the predicate value (`label <= flabel`), the r6'd
+    * selectivity from a |labels|-row broadcast, and the
+    * [[filterStrategyOf]] strategy. Returns (qid, flabel, sel, strategy). */
+  private def labelFilterSel(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val panel = e.filter(col("vec_id") < NPanel)
-      .select(col("vec_id").as("qid"), col("label").cast("long").as("flabel"),
-        col("embedding").as("qe"))
     val lsz = e.groupBy(col("label").cast("long").as("label"))
       .agg(count(lit(1)).as("ln"))
     val ntot = e.agg(count(lit(1)).as("ntot"))
-    val sel = panel.select("qid", "flabel")
+    e.filter(col("vec_id") < NPanel)
+      .select(col("vec_id").as("qid"), col("label").cast("long").as("flabel"))
       .join(broadcast(lsz), col("label") <= col("flabel"))
       .groupBy("qid", "flabel").agg(sum("ln").as("nmatch"))
       .crossJoin(broadcast(ntot))
       .select(col("qid"), col("flabel"),
         r6(col("nmatch").cast("double") / col("ntot")).as("sel"))
       .withColumn("strategy", filterStrategyOf(col("sel")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    // PRE arm: exact cosine among the predicate's rows (per-query theta
-    // join against the broadcast pre slice).
-    val preQ = panel
-      .join(sel.filter(col("strategy") === "pre").select("qid"), "qid")
-    val pre = e
-      .select(col("vec_id"), col("label").cast("long").as("vl"), col("embedding"))
-      .join(broadcast(preQ), col("vl") <= col("flabel"))
-      .select(col("qid"), col("vec_id"),
-        cosineSim(col("embedding"), col("qe")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-    // POST arm: unfiltered probed shortlist at overfetch depth, then
-    // the predicate, then the re-rank.
-    val postQ = panel
-      .join(sel.filter(col("strategy") === "post").select("qid"), "qid")
-    // r19: probe ranks from the shared panel memo (identical per-qid
-    // window; the qid restriction commutes with it).
-    val probes = panelProbeRanks(spark, dir)
-      .join(postQ.select("qid"), "qid")
-    val post = e.join(kasg, "vec_id")
-      .join(broadcast(probes), "cluster")
-      .join(broadcast(postQ), "qid")
-      .select(col("qid"), col("vec_id"), col("label").cast("long").as("vl"),
-        col("flabel"), cosineSim(col("embedding"), col("qe")).as("cos"))
-      .withColumn("srank", row_number().over(w))
-      .filter(col("srank") <= TopK * FilterOverfetch)
-      .filter(col("vl") <= col("flabel"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-    pre.select("qid", "vec_id", "cos", "rank")
-      .unionByName(post.select("qid", "vec_id", "cos", "rank"))
-      .join(broadcast(sel), "qid")
-      .select(col("qid"), col("flabel"), col("sel"), col("strategy"),
-        col("rank").cast("long").as("rank"), col("vec_id"),
-        r6(col("cos")).as("cos"))
-      .orderBy("qid", "rank")
+  }
+
+  /** [[composedFilterAnswers]] for the label predicate over a
+    * checkpointed (qid, flabel, sel, strategy, tier_final) plan, joined
+    * back to the plan's columns. */
+  private def labelFilterAnswers(
+      spark: SparkSession, dir: String, plan: DataFrame): DataFrame = {
+    val e = emb(spark, dir)
+    composedFilterAnswers(spark, dir, plan, Seq("flabel"),
+      corpus = e.select(col("vec_id"), col("label").cast("long").as("vl"),
+        col("embedding")),
+      vpayload = e.select(col("vec_id"), col("label").cast("long").as("vl")),
+      pred = col("vl") <= col("flabel"))
+      .join(broadcast(plan), "qid")
   }
 
   lazy val filteredServePlanSql: String =
@@ -7348,257 +7357,10 @@ object SimilarityOps {
        |FROM fans f JOIN fst ON fst.qid = f.qid
        |ORDER BY f.qid, rank""".stripMargin
 
-  /** Filtered batch serving from the persisted index — the q208 census
-    * as a dispatcher (VERDICT r16 #1, "the most common real query shape
-    * against a vector store"). Each request carries its own predicate
-    * value: (query_id, embedding, flabel), answered as "top-k among
-    * vectors WHERE label `op` flabel" (`op` ∈ "le"/"eq" — the census
-    * gates "le"; "eq" is the common tenant/partition-key case, whose
-    * equi-join pre arm is a broadcast hash join).
-    *
-    * Strategies (per query, by the [[filterStrategyOf]] rule over the
-    * [[indexLabelSizes]] artifact — a |labels|-row broadcast, never a
-    * corpus pass):
-    *  - "pre": the predicate is pushed into the vectors scan itself
-    *    (PushedFilters on the label payload column — row-group stats
-    *    pruning; at 100 TB the deployment additionally partitions or
-    *    sorts hot filter columns), then EXACT cosine top-k over the
-    *    matching rows. Exact at any selectivity; scan cost sel · N.
-    *  - "post": the tier's own unfiltered probed shortlist at
-    *    [[FilterOverfetch]]× TopK depth, then the predicate, re-ranked.
-    *    Scan cost = the probe fraction regardless of selectivity;
-    *    recall-safe only when sel ≥ 1/overfetch (the dispatch
-    *    boundary).
-    * `strategy` forces one arm for probes/specs; "auto" is the shipped
-    * dispatch. Returns (query_id, vec_id, rank, cos, strategy);
-    * Round17Spec pins auto ≡ the q208 census per panel query and each
-    * forced arm ≡ its analytic derivation. */
-  def annIvfServeManyFiltered(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      op: String = "le", strategy: String = "auto",
-      nprobe: Int = NProbeServe, overfetch: Int = FilterOverfetch): DataFrame = {
-    require(Set("le", "eq")(op), s"unknown filter op: $op (one of le, eq)")
-    require(Set("auto", "pre", "post")(strategy),
-      s"unknown filter strategy: $strategy (one of auto, pre, post)")
-    val q2 = queries.select(col("query_id"), col("embedding"),
-      col("flabel").cast("long").as("flabel"))
-    val census = filterCensusOf(spark, indexDir, q2, op, strategy)
-    val bounds = filterBoundsOf(census)
-    val preLb = bounds.collect { case (l, "pre") => l }
-    val postOn = bounds.exists(_._2 == "post")
-    def slice(s: String): DataFrame = q2.join(
-      broadcast(census.filter(col("strategy") === s).select("query_id")),
-      "query_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val pre: Option[DataFrame] = if (preLb.isEmpty) None
-      else Some(filterPreArm(spark, indexDir, slice("pre"), op, preLb))
-    val post: Option[DataFrame] = if (!postOn) None else {
-      val postQ = slice("post")
-      val cent = indexMeta(spark, indexDir, "centroids")
-      val probes = probesMany(cent, qxOf(postQ), nprobe)
-      Some(servedVectorsDf(spark, indexDir)
-        .select(col("vec_id"), col("cluster"),
-          col("label").cast("long").as("vl"), col("embedding"))
-        .join(broadcast(probes), "cluster")
-        .join(broadcast(postQ.select(col("query_id"),
-          col("embedding").as("q_embedding"), col("flabel"))), "query_id")
-        .select(col("query_id"), col("vec_id"), col("vl"), col("flabel"),
-          cosineSim(col("embedding"), col("q_embedding")).as("cos"))
-        .withColumn("srank", row_number().over(w))
-        .filter(col("srank") <= TopK * overfetch)
-        .filter(filterPredOf(op)(col("vl"), col("flabel")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
-        .withColumn("strategy", lit("post")))
-    }
-    val parts = (pre.toSeq ++ post.toSeq).map(_.select(
-      col("query_id"), col("vec_id"), col("rank").cast("long").as("rank"),
-      r6(col("cos")).as("cos"), col("strategy")))
-    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "cos")
-    else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
-  }
-
-  /** Per-query predicate column for the ops the filtered serving twins
-    * support: "le" (range) and "eq" (the tenant/partition-key case). */
-  private def filterPredOf(op: String)(l: Column, fl: Column): Column =
-    if (op == "le") l <= fl else l === fl
-
-  /** The |Q|-row filtered-serve census frame — per query its predicate
-    * value, match count from the [[indexLabelSizes]] artifact (a
-    * |labels|-row broadcast, never a corpus pass), r6'd selectivity,
-    * and the [[filterStrategyOf]] strategy (or the caller's forced
-    * arm). Eager-checkpointed: both slice filters and the driver-side
-    * bounds read it, and the q208 census's exact sel arithmetic is
-    * shared by every filtered consumer. */
-  private def filterCensusOf(
-      spark: SparkSession, indexDir: String, q2: DataFrame,
-      op: String, strategy: String): DataFrame =
-    // The r17 single-label census IS the generalized census with the
-    // degenerate conjunct list (r18) — one marginal, so sel is exactly
-    // the pinned r6(nmatch/ntot) arithmetic.
-    payloadCensusOf(spark, indexDir, q2.select("query_id", "flabel"),
-      Seq(PayloadFilter("label", op, "flabel")), strategy)
-
-  /** Driver-side slice bounds (|Q| rows — the routeAndServe census
-    * price): the pre arm's COARSE literal filter, the part of the
-    * per-query predicate that pushes into the parquet scan. Fails LOUD
-    * on a NULL predicate value: it can never match any payload row, so
-    * letting it through would answer the query with silence instead of
-    * naming the bad request. */
-  private def filterBoundsOf(census: DataFrame): Array[(Long, String)] =
-    census.select("flabel", "strategy").collect().map { r =>
-      require(!r.isNullAt(0),
-        "filtered serve: NULL flabel in the request frame — every " +
-          "filtered query must carry its predicate value")
-      (r.getLong(0), r.getString(1))
-    }
-
-  /** The PRE arm, shared by every filtered twin (an exact answer has no
-    * cheaper tier — pre-filtered requests are tier-independent): the
-    * predicate pushed into the pruned vectors scan (the coarse literal
-    * filter reaches row-group stats; the per-query theta join broadcasts
-    * the |Q|-row slice), then EXACT cosine top-k over the matching
-    * rows. Returns (query_id, vec_id, cos, rank, strategy='pre'). */
-  private def filterPreArm(
-      spark: SparkSession, indexDir: String, preSlice: DataFrame,
-      op: String, preLb: Array[Long]): DataFrame =
-    payloadPreArm(spark, indexDir, preSlice,
-      Seq(PayloadFilter("label", op, "flabel")),
-      Map("label" -> preLb.map(l => l: Any)))
-
-  /** Empty filtered-answer frame in the output schema — an empty
-    * request frame routes nowhere; query_id keeps the CALLER's type so
-    * alternating empty/non-empty batches never schema-conflict in an
-    * appending sink. */
-  private def emptyFilteredFrame(
-      spark: SparkSession, queries: DataFrame, scoreName: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        queries.schema("query_id").copy(name = "query_id"),
-        StructField("vec_id", LongType), StructField("rank", LongType),
-        StructField(scoreName, DoubleType), StructField("strategy", StringType))))
-  }
-
-  /** The tier's batched shortlist plan over the given probe rows + its
-    * native score column — the one table the filtered twins share (measured
-    * in SCALE.md "Filtered ANN serving") so they can never disagree on a
-    * tier's overfetch shape.
-    * `depth` caps: the binary and pq_rerank shortlists pass through a
-    * [[RerankK]]-deep first stage, so their effective overfetch is
-    * min(depth, RerankK). */
-  private def tierShortlistOf(
-      spark: SparkSession, indexDir: String, tier: String, slice: DataFrame,
-      nprobe: Int, depth: Int, probes: DataFrame): (DataFrame, String) = {
-    val p = Some(probes)
-    tier match {
-      case "float" =>
-        (annIvfServeMany(spark, indexDir, slice, nprobe, p, depth), "cos")
-      case "binary" =>
-        (annBinaryServeMany(spark, indexDir, slice, nprobe, p, depth), "cos")
-      case "int8" =>
-        (annInt8ServeMany(spark, indexDir, slice, nprobe, p, depth), "qcos")
-      case "pq" =>
-        (annPqServeMany(spark, indexDir, slice, nprobe, p, depth), "adist")
-      case "pq_rerank" =>
-        (annPqRerankServeMany(spark, indexDir, slice, nprobe, p, depth = depth),
-          "cos")
-      case other => throw new IllegalArgumentException(
-        s"unknown tier: $other (one of ${Tiers.mkString(", ")})")
-    }
-  }
-
-  /** The POST arm for any tier: the tier's own overfetched shortlist
-    * (depth = overfetch × TopK), the predicate applied on a label
-    * read-back pruned to the SAME probed clusters, then the surviving
-    * rows re-ranked IN THE SHORTLIST'S OWN ORDER (row_number over the
-    * shortlist rank — exactly the tier's (score, vec_id) order, so no
-    * rounded-score tie can diverge between engines). Scan cost: the
-    * probe fraction (the tier's own plan) + one pruned (vec_id, label)
-    * column read; recall-safe iff sel ≥ 1/overfetch — the
-    * [[filterStrategyOf]] boundary. */
-  private def filterPostArm(
-      spark: SparkSession, indexDir: String, tier: String, postSlice: DataFrame,
-      census: DataFrame, op: String, nprobe: Int, overfetch: Int): DataFrame =
-    payloadPostArm(spark, indexDir, tier, postSlice, census,
-      Seq(PayloadFilter("label", op, "flabel")), nprobe, overfetch)
-
-  /** Filtered serving for ANY of the five tiers (r18 — VERDICT r17 #1:
-    * "the engine's two marquee dispatches are mutually exclusive on the
-    * same request"). Each request carries its own predicate value
-    * (query_id, embedding, flabel); per query the [[filterStrategyOf]]
-    * rule over the [[indexLabelSizes]] artifact picks:
-    *  - "pre": [[filterPreArm]] — exact at any selectivity,
-    *    tier-independent (the predicate's sel · N rows are scanned
-    *    exactly; no coded tier can undercut an exact answer there);
-    *  - "post": [[filterPostArm]] — the TIER's own overfetched
-    *    shortlist, then the predicate, re-ranked in shortlist order.
-    *    This is where the tier knob pays: the candidate scan runs at
-    *    the tier's own bytes/vector (16-byte binary codes, 64-bit pq,
-    *    int8) instead of the float tier's full embeddings.
-    * `strategy` forces one arm for probes/specs; "auto" is the shipped
-    * dispatch. Returns (query_id, vec_id, rank, score, strategy) where
-    * score is the tier's own r6'd ranking value (cos / qcos / adist —
-    * adist ranks ascending; compare ranks, not scores, across tiers).
-    * Round18Spec pins tier="float" ≡ [[annIvfServeManyFiltered]] per
-    * query, each forced post arm ≡ its analytic derivation, and the
-    * q211 census's post rows ≡ this twin at their `tier_final`. */
-  def tierServeManyFiltered(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      tier: String = "float", op: String = "le", strategy: String = "auto",
-      nprobe: Int = NProbeServe, overfetch: Int = FilterOverfetch): DataFrame = {
-    require(Tiers.contains(tier),
-      s"unknown tier: $tier (one of ${Tiers.mkString(", ")})")
-    require(Set("le", "eq")(op), s"unknown filter op: $op (one of le, eq)")
-    require(Set("auto", "pre", "post")(strategy),
-      s"unknown filter strategy: $strategy (one of auto, pre, post)")
-    val q2 = queries.select(col("query_id"), col("embedding"),
-      col("flabel").cast("long").as("flabel"))
-    val census = filterCensusOf(spark, indexDir, q2, op, strategy)
-    val bounds = filterBoundsOf(census)
-    val preLb = bounds.collect { case (l, "pre") => l }
-    val postOn = bounds.exists(_._2 == "post")
-    def slice(s: String): DataFrame = q2.join(
-      broadcast(census.filter(col("strategy") === s).select("query_id")),
-      "query_id")
-    val pre: Option[DataFrame] = if (preLb.isEmpty) None
-      else Some(filterPreArm(spark, indexDir, slice("pre"), op, preLb)
-        .select(col("query_id"), col("vec_id"),
-          col("rank").cast("long").as("rank"),
-          r6(col("cos")).as("score"), col("strategy")))
-    val post: Option[DataFrame] = if (!postOn) None
-      else Some(filterPostArm(
-        spark, indexDir, tier, slice("post"), census, op, nprobe, overfetch))
-    val parts = (pre.toSeq ++ post.toSeq)
-    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "score")
-    else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
-  }
-
   // ---- q211: composed filter × tier dispatch (r18 — VERDICT r17 #1) --------
 
-  /** q211: the COMPOSED dispatch table — per panel query its label
-    * predicate (`label <= flabel`, the query's own label — the q208
-    * fixture, selectivities ~0.1 → 1.0 so both arms fire at every SF),
-    * its r6'd selectivity and pre/post strategy (the q208 rule), the
-    * ROUTED tier (q203's zero-state slice collapse — the batched
-    * dispatch's own economics), and the answers the composed dispatch
-    * serves: pre queries from the exact arm (tier-independent), post
-    * queries from THEIR ROUTED TIER's overfetched shortlist + predicate
-    * + shortlist-order re-rank. Pre-r18 the engine's two marquee
-    * censuses — which tier (q203/q209) and which filter arm (q208) —
-    * were mutually exclusive on a request; this census oracle-gates
-    * their product (Round18Spec pins its post rows ≡ each routed tier's
-    * [[tierServeManyFiltered]] on an index built from the same corpus).
-    * `score` is the serving tier's own ranking value (cos / qcos /
-    * adist — adist ranks ASCENDING; compare ranks across tiers, not
-    * scores). Census work: selectivities from a |labels|-row broadcast;
-    * tier_final from the memoized q203 frames; each tier's candidate
-    * stack runs only over its routed post slice at [[NProbeServe]]
-    * probes. */
-  /** The composed filter × tier ANSWER machinery shared by q211 and
-    * q214 (r18): given a checkpointed dispatch plan — (qid, strategy,
+  /** The composed filter × tier ANSWER machinery shared by q208, q211
+    * and q214 (r18): given a checkpointed dispatch plan — (qid, strategy,
     * tier_final) plus the predicate's value columns `fcols` — the
     * corpus frame with the payload the predicate reads, and the
     * predicate itself, produce every query's answers: pre = exact
@@ -7617,10 +7379,10 @@ object SimilarityOps {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val wCos = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
     // Dispatch read-back off the CHECKPOINTED plan (bounded: ≤ 2·|Tiers|
-    // rows, the filterBoundsOf discipline): which arms this batch
-    // actually opens. The distributed plan below is built ONLY for open
-    // arms — the slice-collapse rule (routeAndServe refuses to open
-    // sub-economic plans) applied to the census's own answer machinery.
+    // rows): which arms this batch actually opens. The distributed plan
+    // below is built ONLY for open arms — the slice-collapse rule
+    // (routeAndServe refuses to open sub-economic plans) applied to the
+    // census's own answer machinery.
     // Result-identical by construction: an un-routed tier's stack joins
     // an empty broadcast slice and contributes zero rows — but Catalyst
     // still plans it, its checkpoints still run jobs, and its full-corpus
@@ -7745,7 +7507,7 @@ object SimilarityOps {
           .join(pcs, Seq("qid", "vec_id"))
       }
       // Per-tier scored candidates → overfetched srank → predicate →
-      // re-rank IN SHORTLIST ORDER (the filterPostArm contract).
+      // re-rank IN SHORTLIST ORDER (the payloadPostArm contract).
       def scoredOf(df: DataFrame, scoreCol: String, asc: Boolean): DataFrame = {
         val ord = if (asc) col(scoreCol).asc else col(scoreCol).desc
         df.withColumn("srank", row_number().over(
@@ -7777,29 +7539,33 @@ object SimilarityOps {
     }
   }
 
+  /** q211: the COMPOSED dispatch table — per panel query its label
+    * predicate (`label <= flabel`, the query's own label — the q208
+    * fixture, selectivities ~0.1 → 1.0 so both arms fire at every SF),
+    * its r6'd selectivity and pre/post strategy (the q208 rule), the
+    * ROUTED tier (q203's zero-state slice collapse — the batched
+    * dispatch's own economics), and the answers the composed dispatch
+    * serves: pre queries from the exact arm (tier-independent), post
+    * queries from THEIR ROUTED TIER's overfetched shortlist + predicate
+    * + shortlist-order re-rank. Pre-r18 the engine's two marquee
+    * censuses — which tier (q203/q209) and which filter arm (q208) —
+    * were mutually exclusive on a request; this census oracle-gates
+    * their product (Round18Spec pins its post rows ≡ each routed tier's
+    * [[tierServeManyFilteredBy]] label filter on an index built from the
+    * same corpus).
+    * `score` is the serving tier's own ranking value (cos / qcos /
+    * adist — adist ranks ASCENDING; compare ranks across tiers, not
+    * scores). Census work: selectivities from a |labels|-row broadcast;
+    * tier_final from the memoized q203 frames; each tier's candidate
+    * stack runs only over its routed post slice at [[NProbeServe]]
+    * probes. */
   def filterTierPlan(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val lsz = e.groupBy(col("label").cast("long").as("label"))
-      .agg(count(lit(1)).as("ln"))
-    val ntot = e.agg(count(lit(1)).as("ntot"))
-    val plan = e.filter(col("vec_id") < NPanel)
-      .select(col("vec_id").as("qid"), col("label").cast("long").as("flabel"))
-      .join(broadcast(lsz), col("label") <= col("flabel"))
-      .groupBy("qid", "flabel").agg(sum("ln").as("nmatch"))
-      .crossJoin(broadcast(ntot))
-      .select(col("qid"), col("flabel"),
-        r6(col("nmatch").cast("double") / col("ntot")).as("sel"))
-      .withColumn("strategy", filterStrategyOf(col("sel")))
+    val plan = labelFilterSel(spark, dir)
       .join(tierRouteSlice(spark, dir).select(col("qid").as("rqid"),
         col("tier_final")), col("qid") === col("rqid"))
       .select("qid", "flabel", "sel", "strategy", "tier_final")
       .localCheckpoint(true)
-    composedFilterAnswers(spark, dir, plan, Seq("flabel"),
-      corpus = e.select(col("vec_id"), col("label").cast("long").as("vl"),
-        col("embedding")),
-      vpayload = e.select(col("vec_id"), col("label").cast("long").as("vl")),
-      pred = col("vl") <= col("flabel"))
-      .join(broadcast(plan), "qid")
+    labelFilterAnswers(spark, dir, plan)
       .select(col("qid"), col("flabel"), col("sel"), col("strategy"),
         col("tier_final"), col("rank").cast("long").as("rank"), col("vec_id"),
         col("score"))
@@ -8324,18 +8090,22 @@ object SimilarityOps {
       .withColumn("strategy", lit("pre"))
   }
 
-  /** The generalized POST arm for any tier: the tier's own overfetched
-    * shortlist, the AND-predicate applied on a payload read-back pruned
-    * to the SAME probed clusters, surviving rows re-ranked in shortlist
-    * order (the [[filterPostArm]] contract, N conjuncts). */
+  /** The POST arm for any tier: the tier's own shortlist at
+    * [[FilterOverfetch]]× TopK depth ([[tierServeMany]]), the
+    * AND-predicate applied on a payload read-back pruned to the SAME
+    * probed clusters, then the surviving rows re-ranked IN THE
+    * SHORTLIST'S OWN ORDER (row_number over the shortlist rank — exactly
+    * the tier's (score, vec_id) order, so no rounded-score tie can
+    * diverge between engines). Scan cost: the probe fraction (the tier's
+    * own plan) + one pruned payload column read; recall-safe iff
+    * sel ≥ 1/overfetch — the [[filterStrategyOf]] boundary. */
   private def payloadPostArm(
       spark: SparkSession, indexDir: String, tier: String, postSlice: DataFrame,
-      census: DataFrame, filters: Seq[PayloadFilter], nprobe: Int,
-      overfetch: Int): DataFrame = {
+      census: DataFrame, filters: Seq[PayloadFilter], nprobe: Int): DataFrame = {
     val cent = indexMeta(spark, indexDir, "centroids")
     val probes = probesMany(cent, qxOf(postSlice), nprobe)
-    val (shortlist, scoreCol) = tierShortlistOf(
-      spark, indexDir, tier, postSlice, nprobe, TopK * overfetch, probes)
+    val shortlist = tierServeMany(
+      spark, indexDir, tier, postSlice, nprobe, Some(probes), TopK * FilterOverfetch)
     val qvals = census.select(
       col("query_id") +:
         filters.map(f => payloadValCast(f, col(f.valueCol)).as(s"q_${f.valueCol}")): _*)
@@ -8343,9 +8113,7 @@ object SimilarityOps {
       .select(col("vec_id") +: col("cluster") +:
         filters.map(f => col(f.column)): _*)
       .join(broadcast(probes.select("cluster").distinct()), "cluster")
-      .join(broadcast(shortlist
-        .withColumnRenamed(scoreCol, "score")
-        .withColumnRenamed("rank", "srank")), "vec_id")
+      .join(broadcast(shortlist.withColumnRenamed("rank", "srank")), "vec_id")
       .join(broadcast(qvals), "query_id")
       .filter(payloadPredsOf(filters))
       .withColumn("rank", row_number().over(
@@ -8355,22 +8123,38 @@ object SimilarityOps {
         col("score"), lit("post").as("strategy"))
   }
 
-  /** Filtered serving with a GENERALIZED predicate — N typed conjuncts
-    * over the index's payload columns (r18 — VERDICT r17 #2: "real
-    * deployments filter on source/lang strings, timestamp ranges, and
-    * conjunctions"). The request frame carries (query_id, embedding,
-    * <one value column per conjunct>); per query the q208 rule over the
-    * conjunction's estimated selectivity picks the exact pre arm or the
-    * tier's own post arm. `label` remains the oracle-gated degenerate
-    * case ([[tierServeManyFiltered]] ≡ this with the single label
-    * conjunct); q212 oracle-gates the (lang eq), (n_chars le), and
-    * 2-conjunction shapes. Returns (query_id, vec_id, rank, score,
-    * strategy). */
+  /** Filtered batch serving from the persisted index, for any of the
+    * five tiers — the one filtered entry point. The predicate is N typed
+    * conjuncts over the index's payload columns: the request frame
+    * carries (query_id, embedding, <one value column per conjunct>), and
+    * each query is answered as "top-k among vectors WHERE <predicate>".
+    * The label filter is the single conjunct
+    * `PayloadFilter("label", "le" | "eq", "flabel")`.
+    *
+    * Strategies, per query by the [[filterStrategyOf]] rule over the
+    * conjunction's estimated selectivity (the [[indexLabelSizes]] /
+    * [[indexPayloadSizes]] artifacts — bounded broadcasts, never a
+    * corpus pass):
+    *  - "pre": [[payloadPreArm]] — the predicate pushed into the vectors
+    *    scan (PushedFilters on the payload columns), then EXACT cosine
+    *    top-k over the matching rows. Exact at any selectivity and
+    *    tier-independent; scan cost sel · N.
+    *  - "post": [[payloadPostArm]] — the TIER's own overfetched
+    *    shortlist, then the predicate, re-ranked in shortlist order.
+    *    The candidate scan runs at the tier's own bytes/vector.
+    * `strategy` forces one arm; "auto" is the shipped dispatch. Returns
+    * (query_id, vec_id, rank, score, strategy) where score is the tier's
+    * own r6'd ranking value (cos / qcos / adist — adist ranks ascending;
+    * compare ranks, not scores, across tiers). Round17Spec pins the
+    * float label filter ≡ the q208 census per query and each forced arm
+    * ≡ its analytic derivation; Round18Spec pins the q212 shapes ≡ that
+    * census, each coded tier's post arm ≡ its derivation, and the q211 /
+    * q214 post rows ≡ this at their `tier_final`. */
   def tierServeManyFilteredBy(
       spark: SparkSession, indexDir: String, queries: DataFrame,
       filters: Seq[PayloadFilter], tier: String = "float",
       strategy: String = "auto",
-      nprobe: Int = NProbeServe, overfetch: Int = FilterOverfetch): DataFrame = {
+      nprobe: Int = NProbeServe): DataFrame = {
     require(Tiers.contains(tier),
       s"unknown tier: $tier (one of ${Tiers.mkString(", ")})")
     require(Set("auto", "pre", "post")(strategy),
@@ -8391,10 +8175,24 @@ object SimilarityOps {
           r6(col("cos")).as("score"), col("strategy")))
     val post: Option[DataFrame] = if (!postOn) None
       else Some(payloadPostArm(
-        spark, indexDir, tier, slice("post"), census, filters, nprobe, overfetch))
+        spark, indexDir, tier, slice("post"), census, filters, nprobe))
     val parts = pre.toSeq ++ post.toSeq
-    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "score")
+    if (parts.isEmpty) emptyFilteredFrame(spark, queries)
     else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
+  }
+
+  /** Empty filtered-answer frame in the output schema — an empty
+    * request frame routes nowhere; query_id keeps the CALLER's type so
+    * alternating empty/non-empty batches never schema-conflict in an
+    * appending sink. */
+  private def emptyFilteredFrame(
+      spark: SparkSession, queries: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(
+        queries.schema("query_id").copy(name = "query_id"),
+        StructField("vec_id", LongType), StructField("rank", LongType),
+        StructField("score", DoubleType), StructField("strategy", StringType))))
   }
 
   /** q212: the GENERALIZED-payload filtered-serve census — the q208

@@ -1174,9 +1174,10 @@ object StreamingOps {
     * streaming can't express — and each request batch is a complete,
     * self-contained serving job anyway. `tier` selects the serving
     * arithmetic per stream — any of the five batched tiers ("float",
-    * "binary", "int8", "pq", "pq_rerank") so a deployment can run one
-    * request stream per cost tier against the same persisted index —
-    * or "auto", which routes each request through the learned tier
+    * "binary", "int8", "pq", "pq_rerank"), served through
+    * SimilarityOps.tierServeMany, the one tier table routeAndServe also
+    * dispatches through, so a deployment can run one request stream per
+    * cost tier against the same persisted index — or "auto", which routes each request through the learned tier
     * weights (loaded from `stateDir` per micro-batch, so a TierPass
     * landing mid-stream re-routes the NEXT batch — the reference's
     * feedback-persists contract) and dispatches each routed group to
@@ -1235,21 +1236,9 @@ object StreamingOps {
               // census — fewer, fuller plans per micro-batch).
               SimilarityOps.routeAndServe(s, indexDir, reqs, w, nprobe,
                 batchCost = true, sliceAware = true)
-            case "binary" =>
-              SimilarityOps.annBinaryServeMany(s, indexDir, reqs, nprobe)
-                .withColumnRenamed("cos", "score").withColumn("tier", lit(tier))
-            case "int8" =>
-              SimilarityOps.annInt8ServeMany(s, indexDir, reqs, nprobe)
-                .withColumnRenamed("qcos", "score").withColumn("tier", lit(tier))
-            case "pq" =>
-              SimilarityOps.annPqServeMany(s, indexDir, reqs, nprobe)
-                .withColumnRenamed("adist", "score").withColumn("tier", lit(tier))
-            case "pq_rerank" =>
-              SimilarityOps.annPqRerankServeMany(s, indexDir, reqs, nprobe)
-                .withColumnRenamed("cos", "score").withColumn("tier", lit(tier))
-            case _ =>
-              SimilarityOps.annIvfServeMany(s, indexDir, reqs, nprobe)
-                .withColumnRenamed("cos", "score").withColumn("tier", lit(tier))
+            case fixed =>
+              SimilarityOps.tierServeMany(s, indexDir, fixed, reqs, nprobe,
+                None, SimilarityOps.TopK).withColumn("tier", lit(fixed))
           }
           answered.write.mode("append").parquet(outDir)
         }

@@ -168,13 +168,17 @@ final class JdbcTelemetryStore(spark: SparkSession, url: String,
 }
 
 /** In-memory store for tests / ephemeral sessions; safe for concurrent
-  * callers. */
+  * callers. Each append is collected once into a local relation, so the
+  * logged rows (their `current_timestamp()` `ts_unix` included) are the
+  * values at log time, not re-evaluated on every read. Collecting the
+  * callers' projections over local relations runs no Spark job. */
 final class InMemoryTelemetryStore extends TelemetryStore {
   @volatile private var state = RouterState()
   private val logged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   override def logRuns(runs: DataFrame): Unit = {
-    runs.count()
-    logged.synchronized { logged += runs }
+    val rows = runs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(runs.collect(): _*), runs.schema)
+    logged.synchronized { logged += rows }
   }
   override def loadRouterState(): RouterState = state
   override def saveRouterState(s: RouterState): Unit = { state = s }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.SimilarityOps
+import graft.operators.SimilarityOps.PayloadFilter
 
 /** Round-17 pins — filtered ANN serving (VERDICT r16 #1): the q208
   * census IS the dispatcher's behavior, each forced arm matches its
@@ -26,15 +27,24 @@ class Round17Spec extends SparkSpec {
     .select(col("vec_id").as("query_id"), col("embedding"),
       col("label").cast("long").as("flabel"))
 
+  /** The label filter through the one filtered entry point, float tier:
+    * "top-k among vectors WHERE label `op` flabel". */
+  private def labelServe(
+      dir: String, queries: org.apache.spark.sql.DataFrame, op: String = "le",
+      strategy: String = "auto") =
+    SimilarityOps.tierServeManyFilteredBy(spark, dir, queries,
+      Seq(PayloadFilter("label", op, "flabel")), strategy = strategy)
+
   test("filtered serve (auto) ≡ the q208 census per panel query: same " +
     "strategy, same (rank, vec_id) answers — the census is the dispatch") {
     val census = SimilarityOps.filteredServePlan(spark, sf).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"))).toMap
-    val served = SimilarityOps
-      .annIvfServeManyFiltered(spark, idx, panelQueries).collect()
+        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
+          r.getAs[Double]("cos"))).toMap
+    val served = labelServe(idx, panelQueries).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"))).toMap
+        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
+          r.getAs[Double]("score"))).toMap
     assert(served.nonEmpty && served == census,
       s"filtered serve diverged from q208: ${served.size} vs ${census.size} rows")
   }
@@ -57,8 +67,7 @@ class Round17Spec extends SparkSpec {
       .filter(col("rank") <= SimilarityOps.TopK)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank").toLong) ->
         r.getAs[Long]("vec_id")).toMap
-    val pre = SimilarityOps
-      .annIvfServeManyFiltered(spark, idx, panelQueries, strategy = "pre")
+    val pre = labelServe(idx, panelQueries, strategy = "pre")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("vec_id")).toMap
     assert(pre == truth, "forced pre diverged from the exact filtered truth")
@@ -67,7 +76,7 @@ class Round17Spec extends SparkSpec {
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("vec_id")).toMap
     val postIds = censusPost.keys.map(_._1).toSet
-    val post = SimilarityOps.annIvfServeManyFiltered(spark, idx,
+    val post = labelServe(idx,
         panelQueries.filter(col("query_id").isin(postIds.toSeq: _*)),
         strategy = "post")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
@@ -79,8 +88,7 @@ class Round17Spec extends SparkSpec {
   test("pre arm pushes the label predicate into the parquet scan " +
     "(PushedFilters on the payload column) — the 100 TB reason the " +
     "payload lives ON the vector rows") {
-    val plan = SimilarityOps
-      .annIvfServeManyFiltered(spark, idx, panelQueries, strategy = "pre")
+    val plan = labelServe(idx, panelQueries, strategy = "pre")
       .queryExecution.executedPlan.toString
     assert(plan.contains("IsNotNull(label)") &&
       plan.contains("LessThanOrEqual(label"),
@@ -89,8 +97,7 @@ class Round17Spec extends SparkSpec {
 
   test("op = eq answers only the query's own label and routes pre " +
     "(sel ≈ 0.1 ≤ 1/overfetch); every returned id carries the label") {
-    val served = SimilarityOps
-      .annIvfServeManyFiltered(spark, idx, panelQueries, op = "eq")
+    val served = labelServe(idx, panelQueries, op = "eq")
     val rows = served.collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[String]("strategy") == "pre"))
     val labelOf = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -115,7 +122,7 @@ class Round17Spec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$unlabeled/embeddings.parquet")
     SimilarityOps.writeIndex(spark, unlabeled, dir)
     val err = intercept[IllegalArgumentException] {
-      SimilarityOps.annIvfServeManyFiltered(spark, dir, panelQueries)
+      labelServe(dir, panelQueries)
     }
     assert(err.getMessage.contains("label payload"))
   }

@@ -110,9 +110,31 @@ class Round18Spec extends SparkSpec {
     }
   }
 
+  test("generalized filtered serve fails LOUD on a NULL predicate value, " +
+    "naming the value column") {
+    val conj = Seq(PayloadFilter("lang", "eq", "flang"),
+      PayloadFilter("n_chars", "le", "fchars"))
+    val q = panelQueries.withColumn("fchars",
+      when(col("query_id") === 0L, lit(null).cast("long")).otherwise(col("fchars")))
+    val err = intercept[IllegalArgumentException] {
+      SimilarityOps.tierServeManyFilteredBy(spark, idx, q, conj)
+    }
+    assert(err.getMessage.contains("NULL fchars in the request frame"), err.getMessage)
+  }
+
+  test("generalized filtered serve on an empty request frame: 0 rows in " +
+    "the answer schema, query_id keeping the caller's type") {
+    val q = panelQueries.limit(0).withColumn("query_id", col("query_id").cast("string"))
+    val out = SimilarityOps.tierServeManyFilteredBy(spark, idx, q,
+      Seq(PayloadFilter("label", "le", "flabel")))
+    assert(out.columns.toSeq == Seq("query_id", "vec_id", "rank", "score", "strategy"))
+    assert(out.schema("query_id").dataType == org.apache.spark.sql.types.StringType)
+    assert(out.count() == 0)
+  }
+
   // ---- q211: composed filter × tier dispatch (VERDICT r17 #1) ---------------
 
-  test("q211's post rows ≡ tierServeManyFiltered of their tier_final — " +
+  test("q211's post rows ≡ the label filter served at their tier_final — " +
     "the composed census answers each post query from its routed " +
     "tier's own filtered twin") {
     val census = SimilarityOps.filterTierPlan(spark, sf).collect()
@@ -129,8 +151,9 @@ class Round18Spec extends SparkSpec {
     assert(postTiers.nonEmpty, "no post queries routed — fixture degenerate")
     postTiers.foreach { case (tier, qids) =>
       val ids = qids.map(_._1).toSet
-      val twin = SimilarityOps.tierServeManyFiltered(spark, idx,
-        panelQueries.filter(col("query_id").isin(ids.toSeq: _*)), tier = tier)
+      val twin = SimilarityOps.tierServeManyFilteredBy(spark, idx,
+        panelQueries.filter(col("query_id").isin(ids.toSeq: _*)),
+        Seq(PayloadFilter("label", "le", "flabel")), tier = tier)
         .collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
           (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"))).toMap
@@ -139,22 +162,6 @@ class Round18Spec extends SparkSpec {
       }
       assert(mine == twin, s"q211 post rows at tier $tier ≠ its filtered twin")
     }
-  }
-
-  test("tierServeManyFiltered(float) ≡ annIvfServeManyFiltered per " +
-    "query — the tier lattice's float row IS the r17 filtered serve") {
-    val viaTier = SimilarityOps.tierServeManyFiltered(spark, idx, panelQueries)
-      .collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[Double]("score"))).toMap
-    val viaFloat = SimilarityOps.annIvfServeManyFiltered(spark, idx, panelQueries)
-      .collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[String]("strategy"),
-          r.getAs[Double]("cos"))).toMap
-    assert(viaTier.nonEmpty && viaTier == viaFloat,
-      s"float tier twin diverged: ${viaTier.size} vs ${viaFloat.size}")
   }
 
   // ---- payload lifecycle + estimator artifact (VERDICT r17 #2) --------------

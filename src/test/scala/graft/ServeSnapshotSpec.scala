@@ -229,6 +229,17 @@ class ServeSnapshotSpec extends SparkSpec {
     assert(store.runFrames.map(_.count()).sum == 1)
   }
 
+  test("InMemoryTelemetryStore keeps the log-time ts_unix: two reads of a logged " +
+    "row with a pause between them agree") {
+    val store = new InMemoryTelemetryStore
+    Pipeline.runOnce(spark, idx, labels, store, "anything at all", K).collect()
+    assert(store.runFrames.size == 1)
+    def tsUnix: Double = store.runFrames.head.select("ts_unix").collect().single.getDouble(0)
+    val first = tsUnix
+    Thread.sleep(1500)
+    assert(tsUnix == first, "ts_unix re-evaluated at read time")
+  }
+
   test("edge: a duplicate doc_id fails the snapshot loudly") {
     val dup = Seq(("D-1", "t", "one.", 0L), ("D-2", "t", "two.", 1L), ("D-1", "t", "three.", 2L))
       .toDF("doc_id", "title", "text", "doc_idx")
