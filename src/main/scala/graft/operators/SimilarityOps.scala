@@ -6265,19 +6265,10 @@ object SimilarityOps {
               "serve request aborted")
       }
     }
-    // An empty request frame routes nowhere — answer with an empty frame
-    // of the output schema instead of crashing reduce. query_id keeps
-    // the CALLER's type (the tier plans propagate it on non-empty
-    // input; a hardcoded type here would make alternating empty and
-    // non-empty batches schema-conflict in an appending sink).
-    if (parts.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          queries.schema("query_id").copy(name = "query_id"),
-          StructField("vec_id", LongType), StructField("rank", LongType),
-          StructField("score", DoubleType), StructField("tier", StringType))))
-    } else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
+    // An empty request frame routes nowhere: answer with an empty frame
+    // of the output schema instead of crashing reduce.
+    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "tier")
+    else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
   }
 
   /** Dedicated bounded pool for the routed per-tier dispatch: at most
@@ -8101,11 +8092,11 @@ object SimilarityOps {
     * sel ≥ 1/overfetch — the [[filterStrategyOf]] boundary. */
   private def payloadPostArm(
       spark: SparkSession, indexDir: String, tier: String, postSlice: DataFrame,
-      census: DataFrame, filters: Seq[PayloadFilter], nprobe: Int): DataFrame = {
+      census: DataFrame, filters: Seq[PayloadFilter]): DataFrame = {
     val cent = indexMeta(spark, indexDir, "centroids")
-    val probes = probesMany(cent, qxOf(postSlice), nprobe)
+    val probes = probesMany(cent, qxOf(postSlice), NProbeServe)
     val shortlist = tierServeMany(
-      spark, indexDir, tier, postSlice, nprobe, Some(probes), TopK * FilterOverfetch)
+      spark, indexDir, tier, postSlice, NProbeServe, Some(probes), TopK * FilterOverfetch)
     val qvals = census.select(
       col("query_id") +:
         filters.map(f => payloadValCast(f, col(f.valueCol)).as(s"q_${f.valueCol}")): _*)
@@ -8153,8 +8144,7 @@ object SimilarityOps {
   def tierServeManyFilteredBy(
       spark: SparkSession, indexDir: String, queries: DataFrame,
       filters: Seq[PayloadFilter], tier: String = "float",
-      strategy: String = "auto",
-      nprobe: Int = NProbeServe): DataFrame = {
+      strategy: String = "auto"): DataFrame = {
     require(Tiers.contains(tier),
       s"unknown tier: $tier (one of ${Tiers.mkString(", ")})")
     require(Set("auto", "pre", "post")(strategy),
@@ -8175,24 +8165,25 @@ object SimilarityOps {
           r6(col("cos")).as("score"), col("strategy")))
     val post: Option[DataFrame] = if (!postOn) None
       else Some(payloadPostArm(
-        spark, indexDir, tier, slice("post"), census, filters, nprobe))
+        spark, indexDir, tier, slice("post"), census, filters))
     val parts = pre.toSeq ++ post.toSeq
-    if (parts.isEmpty) emptyFilteredFrame(spark, queries)
+    if (parts.isEmpty) emptyFilteredFrame(spark, queries, "strategy")
     else parts.reduce(_.unionByName(_)).orderBy("query_id", "rank")
   }
 
-  /** Empty filtered-answer frame in the output schema — an empty
-    * request frame routes nowhere; query_id keeps the CALLER's type so
-    * alternating empty/non-empty batches never schema-conflict in an
-    * appending sink. */
+  /** Empty served-answer frame (query_id, vec_id, rank, score, `last`):
+    * an empty request frame routes nowhere. query_id keeps the CALLER's
+    * type so alternating empty/non-empty batches never schema-conflict in
+    * an appending sink. `last` names the final string column: `tier` for
+    * [[routeAndServe]], `strategy` for [[tierServeManyFilteredBy]]. */
   private def emptyFilteredFrame(
-      spark: SparkSession, queries: DataFrame): DataFrame = {
+      spark: SparkSession, queries: DataFrame, last: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
         queries.schema("query_id").copy(name = "query_id"),
         StructField("vec_id", LongType), StructField("rank", LongType),
-        StructField("score", DoubleType), StructField("strategy", StringType))))
+        StructField("score", DoubleType), StructField(last, StringType))))
   }
 
   /** q212: the GENERALIZED-payload filtered-serve census — the q208

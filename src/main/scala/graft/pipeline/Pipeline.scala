@@ -15,8 +15,10 @@ import graft.telemetry.TelemetryStore
   * entry points (reference run.py:16-73 and evaluate.py:16-116). Both
   * halves of the loop, the online `runOnce` and the batch
   * evaluate-and-update pass `evaluateAll`, run on the in-memory
-  * [[ServeSnapshot]] of the built indexes. Spark builds the indexes and
-  * does the label, router-state and telemetry I/O.
+  * [[ServeSnapshot]] of the built indexes. Spark builds the indexes,
+  * reads the corpus and the labels, and writes the router state once per
+  * pass; a `runOnce` request runs no Spark job (the label lookup is a
+  * driver-side map, the telemetry store reads and writes on the driver).
   */
 object Pipeline {
 
@@ -44,8 +46,8 @@ object Pipeline {
         col("d.text").as("text"), col("doc_idx"))
   }
 
-  /** The labels, read once into a local relation: filtering or collecting
-    * it runs no job. */
+  /** The labels, read once into a local relation: collecting it runs no
+    * job. */
   def loadLabelsJsonl(spark: SparkSession, path: String): DataFrame =
     spark.createDataFrame(spark.read.schema(labelSchema).json(path).collect().toSeq.asJava,
       labelSchema)
@@ -94,8 +96,8 @@ object Pipeline {
 
   /** Batch evaluation + feedback (reference evaluate.py:16-116) over the
     * serving snapshot: every label is routed and scored on all three arms
-    * on the driver; Spark reads the labels and the router state and writes
-    * the state and the run log.
+    * on the driver. The pass's one Spark write is the router state's
+    * overwrite; the store logs the run rows on the driver.
     *
     * Semantics choice (documented in SURVEY.md §3.2): the reference routes
     * label i against state mutated by labels 1..i-1; the update deltas are
@@ -180,15 +182,34 @@ object Pipeline {
     StructField("answer", StringType), StructField("score", DoubleType),
     StructField("context", StringType)))
 
+  /** Labeled (expected_doc_id, expected_answer) by query text, built once
+    * per labels frame (a frame is immutable; the memo holds it weakly, by
+    * identity). The reference keeps ONE label per query text (dict, last
+    * insertion wins); dedup deterministically on the highest query_id,
+    * nulls last. */
+  private val labelMaps = com.google.common.cache.CacheBuilder.newBuilder().weakKeys()
+    .build[DataFrame, Map[String, (String, String)]]()
+
+  private def labelsByQuery(labels: DataFrame): Map[String, (String, String)] =
+    labelMaps.get(labels, () =>
+      labels.select("query_id", "query", "expected_doc_id", "expected_answer").collect().toSeq
+        .filter(!_.isNullAt(1))
+        .groupBy(_.getString(1))
+        .map { case (q, ls) =>
+          val l = ls.maxBy(l => Option(l.getString(0)))
+          q -> (l.getString(2), l.getString(3))
+        })
+
   /** Single-query entry point (reference run.py:16-73). Routes with the
     * current state, scores only the chosen arm, answers, scores the answer
     * if the query is labeled, and logs one run row. Routing, retrieval,
-    * the answer and its evaluation run over the in-memory serving snapshot;
-    * the Spark work per request is the telemetry append (the label lookup
-    * runs none over [[loadLabelsJsonl]]'s local relation). The returned
-    * frame is a local relation: collecting it runs no job. With an empty
-    * top-k (e.g. an empty corpus) it still returns the fallback answer
-    * with score 0 and logs the run (run.py:63-73).
+    * the answer and its evaluation run over the in-memory serving snapshot,
+    * the label lookup over a driver-side map of `labels`, and the store
+    * reads the state and writes the run row on the driver: a request runs
+    * no Spark job. The returned frame is a local relation: collecting it
+    * runs no job. With an empty top-k (e.g. an empty corpus) it still
+    * returns the fallback answer with score 0 and logs the run
+    * (run.py:63-73).
     */
   def runOnce(
       spark: SparkSession,
@@ -203,12 +224,8 @@ object Pipeline {
     val top = snap.topK(scores, k)
     val answer = snap.answer(query, top)
 
-    // Reference keeps ONE label per query text (dict, last insertion wins);
-    // dedup deterministically on the highest query_id, nulls last.
-    val score = labels.filter(col("query") === query)
-      .select("query_id", "expected_doc_id", "expected_answer").collect()
-      .maxByOption(l => Option(l.getString(0)))
-      .fold(0.0)(l => snap.evaluate(top, answer, l.getString(1), l.getString(2)).total)
+    val score = labelsByQuery(labels).get(query)
+      .fold(0.0) { case (doc, ans) => snap.evaluate(top, answer, doc, ans).total }
 
     val result = spark.createDataFrame(java.util.List.of(Row(query, strategy,
       top.toSeq.map(i => Row(snap.docId(i), scores(i))), answer, score, snap.context(top))),

@@ -15,13 +15,14 @@ import graft.evalr.Evaluator
 import graft.pipeline.{Pipeline, ServeSnapshot}
 import graft.retrieve.Retrievers
 import graft.router.{Router, RouterState}
-import graft.telemetry.{InMemoryTelemetryStore, ParquetTelemetryStore}
+import graft.telemetry.{InMemoryTelemetryStore, ParquetTelemetryStore, TelemetryStore}
 
 /** The serving snapshot ≡ the Spark layers it replaces on the online path:
   * features, routing, all three arms' top-k, answer, context and
   * evaluation, on the golden labels, a generated panel over the bundled
   * corpus and a panel over the sf0.001 documents; plus `runOnce` under
-  * concurrent callers and the snapshot's edge cases.
+  * concurrent callers, the snapshot's edge cases and the parquet telemetry
+  * store on the request path (no Spark job, its file layout, read-back).
   */
 class ServeSnapshotSpec extends SparkSpec {
   import spark.implicits._
@@ -274,6 +275,149 @@ class ServeSnapshotSpec extends SparkSpec {
     assert(ServeSnapshot.collects.get - collectsBefore == 1)
     assert(spark.read.parquet(s"$dir/runs").count() == concurrent.size + serial.size)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- heldBefore).isEmpty)
+  }
+
+  // ---- the parquet store on the request path --------------------------------
+
+  private val requestQs = Seq("What is BM25 used for?", "INC-49217 details",
+    "Ünïcode İstanbul straße cache 🚀 stampede", "bm")
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Passes each run frame on to `inner` as a local relation of its rows,
+    * collected once, and keeps those rows: what the store was asked to log. */
+  private final class Recording(inner: TelemetryStore) extends TelemetryStore {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    override def logRuns(runs: DataFrame): Unit = {
+      val got = runs.collect()
+      rows ++= got
+      inner.logRuns(runs.sparkSession.createDataFrame(got.toSeq.asJava, runs.schema))
+    }
+    override def loadRouterState(): RouterState = inner.loadRouterState()
+    override def saveRouterState(s: RouterState): Unit = inner.saveRouterState(s)
+  }
+
+  private def runNames(dir: String): Seq[String] =
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir, "runs")).iterator.asScala
+      .map(_.getFileName.toString).toSeq.sorted
+
+  test("runOnce against a ParquetTelemetryStore runs 0 Spark jobs") {
+    idx.serve; labels // built outside the count: both read their input with Spark once
+    val dir = tempDir("graft-serve-jobs")
+    val store = new ParquetTelemetryStore(spark, dir)
+    val (rows, jobs) = JobCounter.jobsOf(spark.sparkContext) {
+      requestQs.map(q => Pipeline.runOnce(spark, idx, labels, store, q, K).collect().single)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs for ${requestQs.size} requests")
+    assert(rows.map(_.getAs[String]("query")) == requestQs)
+    assert(spark.read.parquet(s"$dir/runs").count() == requestQs.size)
+  }
+
+  test("runOnce against a ParquetTelemetryStore with a router state present runs 0 Spark " +
+    "jobs and routes by that state") {
+    val snap = idx.serve; labels
+    val dir = tempDir("graft-serve-jobs-state")
+    val store = new ParquetTelemetryStore(spark, dir)
+    val st = RouterState(-0.3, 0.2, 0.1)
+    store.saveRouterState(st)
+    val (rows, jobs) = JobCounter.jobsOf(spark.sparkContext) {
+      requestQs.map(q => Pipeline.runOnce(spark, idx, labels, store, q, K).collect().single)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs for ${requestQs.size} requests")
+    assert(store.loadRouterState() == st)
+    rows.zip(requestQs).foreach { case (r, q) =>
+      assert(r.getAs[String]("strategy") == ServeSnapshot.route(snap.features(q), st).strategy, q)
+    }
+  }
+
+  test("the run row runOnce logs reads back through spark.read.parquet with the run " +
+    "schema and the logged values, meta_json byte for byte") {
+    val dir = tempDir("graft-serve-readback")
+    val store = new Recording(new ParquetTelemetryStore(spark, dir))
+    requestQs.foreach(q => Pipeline.runOnce(spark, idx, labels, store, q, K).collect())
+    val back = spark.read.parquet(s"$dir/runs")
+    assert(back.schema == StructType(Seq(
+      StructField("ts_unix", DoubleType), StructField("query", StringType),
+      StructField("strategy", StringType), StructField("score", DoubleType),
+      StructField("meta_json", StringType))))
+    val got = back.collect().sortBy(_.getString(1)).toSeq
+    val want = store.rows.sortBy(_.getString(1)).toSeq
+    assert(got == want)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.getString(4).getBytes("UTF-8").sameElements(w.getString(4).getBytes("UTF-8")))
+    }
+  }
+
+  test("a runs directory holding a Spark append and store-written files reads back " +
+    "every row") {
+    val dir = tempDir("graft-serve-mixed")
+    val runs = Seq((1.5, "spark append", "keyword", 1.0, """{"k":5}"""),
+      (2.5, null, "vector", 0.0, null))
+      .toDF("ts_unix", "query", "strategy", "score", "meta_json")
+    runs.write.mode("append").parquet(s"$dir/runs")
+    val store = new ParquetTelemetryStore(spark, dir)
+    val more = Seq((3.5, "store one", "hybrid", 0.7, """{"k":3,"top_doc_ids":["DOC-001"]}"""),
+      (4.5, "store two", "keyword", 1.0, "{}"))
+      .toDF("ts_unix", "query", "strategy", "score", "meta_json")
+    store.logRuns(more.limit(1))
+    store.logRuns(more.filter(col("ts_unix") > 4.0))
+    assert(spark.read.parquet(s"$dir/runs").collect().sortBy(_.getDouble(0)).toSeq ==
+      runs.union(more).collect().toSeq)
+    assert(store.recentRuns(2).collect().map(_.getString(1)).toSeq == Seq("store two", "store one"))
+  }
+
+  test("the store leaves runs/ with only visible part files; a stray hidden .part- file " +
+    "is ignored by the read and the row count") {
+    val dir = tempDir("graft-serve-layout")
+    val store = new ParquetTelemetryStore(spark, dir)
+    requestQs.foreach(q => Pipeline.runOnce(spark, idx, labels, store, q, K).collect())
+    val names = runNames(dir)
+    assert(names.size == requestQs.size)
+    names.foreach(n => assert(n.matches("part-[0-9a-f-]{36}\\.parquet"), n))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "runs", s".part-${java.util.UUID.randomUUID}.parquet"),
+      "PAR1 partial".getBytes("UTF-8"))
+    assert(spark.read.parquet(s"$dir/runs").count() == requestQs.size)
+  }
+
+  test("loadRouterState fails naming the path when router_state/ holds other than one " +
+    "file or one row") {
+    val twoFiles = tempDir("graft-state-two")
+    Seq(RouterState(), RouterState(0.1, 0.2, 0.3)).map { s =>
+      (s.weightVector, s.weightKeyword, s.weightHybrid, s.lr)
+    }.toDF("weight_vector", "weight_keyword", "weight_hybrid", "lr")
+      .repartition(2).write.parquet(s"$twoFiles/router_state")
+    val e2 = intercept[IllegalStateException](new ParquetTelemetryStore(spark, twoFiles).loadRouterState())
+    assert(e2.getMessage.contains(s"$twoFiles/router_state"), e2.getMessage)
+
+    val noRow = tempDir("graft-state-empty")
+    Seq.empty[(Double, Double, Double, Double)]
+      .toDF("weight_vector", "weight_keyword", "weight_hybrid", "lr")
+      .coalesce(1).write.parquet(s"$noRow/router_state")
+    val e0 = intercept[IllegalStateException](new ParquetTelemetryStore(spark, noRow).loadRouterState())
+    assert(e0.getMessage.contains(s"$noRow/router_state"), e0.getMessage)
+  }
+
+  test("a ParquetTelemetryStore on a scheme-less dir in a session whose fs.defaultFS is a " +
+    "viewfs:// mount logs runs and round-trips the router state through that file system") {
+    val target = tempDir("graft-serve-viewfs")
+    // A local temp path as the mount point: a store that misses the default
+    // file system writes there, not beside the mount target.
+    val mount = s"${tempDir("graft-serve-viewfs-mount")}/telemetry"
+    val view = spark.newSession()
+    view.conf.set("fs.defaultFS", "viewfs://graftspec/")
+    view.conf.set(s"fs.viewfs.mounttable.graftspec.link.$mount", s"file://$target")
+    val store = new ParquetTelemetryStore(view, mount)
+    assert(store.loadRouterState() == RouterState())
+    requestQs.foreach(q => Pipeline.runOnce(view, idx, labels, store, q, K).collect())
+    val st = RouterState(0.25, -0.125, -0.125)
+    store.saveRouterState(st)
+    assert(store.loadRouterState() == st)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(mount)), "wrote to the local disk")
+    assert(store.recentRuns(10).count() == requestQs.size)
+    assert(spark.read.parquet(s"$target/runs").select("query").collect().map(_.getString(0))
+      .sorted.toSeq == requestQs.sorted)
+    assert(runNames(target).filterNot(_.startsWith(".")).forall(_.matches("part-.*\\.parquet")))
   }
 
   // ---- evaluateAll over the snapshot ---------------------------------------
